@@ -22,12 +22,26 @@ Stage 2 — composite indicator flags on the NO-flag subset only
   10 RPUE > 2500 MZN/fisher/h (Inf excluded)
   11 zero fishers with catch_outcome "1"
 
-The two stages merge with a full join per submission and flagged
-submissions are excluded from the validated output.  The flag battery
-is data — (flag_id, predicate) pairs evaluated as ``when`` columns in
-one scan — and the taxa-bounds join broadcasts, so the whole stage-1
-pass is a single scan + one tiny join; stage 2 adds one aggregation
-over the surviving submissions.
+Both stages and the exclusion are projections of ONE per-submission
+frame: the stage-1 rollup (``consolidate_flags`` over the rule-annotated
+rows) joined 1:1, null-safe on ``submission_id``, to ``trip_indicators``
+over the catch-zeroed rows.  The composite flag is evaluated only where
+the stage-1 flag is NULL and the id is non-NULL, ``alert_flag`` is
+``coalesce(stage1, composite)``, and ``validated`` keeps the rows whose
+``alert_flag`` is NULL or whose id is NULL.  This equals the reference's
+anti-join → stage 2 → full-join merge → anti-join formulation exactly:
+
+* stage 1 excludes WHOLE submissions, so a stage-1-clean submission's
+  stage-2 indicators are its aggregate over all of its rows;
+* composite ids are a subset of the stage-1-clean ids, so the full-join
+  merge of the two flag stages reduces to a coalesce;
+* the NULL-id group keeps only its stage-1 flags and stays in
+  ``validated``, because an anti join never matches a NULL key.
+
+The flag battery is data — (flag_id, predicate) pairs evaluated as one
+projection — and the taxa-bounds join broadcasts, so the DAG is one
+scan per aggregate and one join, with no full outer merge and no
+anti-join pass.
 """
 
 from __future__ import annotations
@@ -39,7 +53,6 @@ from pyspark.sql import functions as F
 
 from ..functions.columns import flag_concat, safe_div
 from ..operators.aggregates import robust_bounds, sum_not_null
-from ..operators.joins import anti_join
 
 # validation thresholds (R/validation.R:144-150; config inst/config.yml)
 THRESHOLDS: Mapping[str, float] = {
@@ -222,10 +235,9 @@ def trip_indicators(validated: DataFrame) -> DataFrame:
     )
 
 
-def composite_indicator_flags(
-    indicators: DataFrame, thresholds: Mapping[str, float] | None = None
-) -> DataFrame:
-    """Stage-2 flags 8–11 on per-trip indicators (R/validation.R:360-400).
+def composite_flag(thresholds: Mapping[str, float] | None = None) -> Column:
+    """Stage-2 flags 8–11 over per-trip indicator columns
+    (R/validation.R:360-400), comma-joined; NULL when none fires.
 
     ``price_per_kg``/``cpue``/``rpue`` arrive Inf-normalized-to-NULL from
     ``safe_div``; R's un-guarded ``price_kg > max`` fires on Inf (zero
@@ -233,26 +245,28 @@ def composite_indicator_flags(
     t = {**THRESHOLDS, **(thresholds or {})}
     price_inf = (F.col("catch_kg") == 0) & (F.col("catch_price") > 0)
     flag8 = price_inf | (F.col("price_per_kg") > t["price_kg_max"])
-    flags = flag_concat(
+    return flag_concat(
         F.when(flag8, F.lit("8")),
         F.when(F.col("cpue") > t["cpue_max"], F.lit("9")),
         F.when(F.col("rpue") > t["rpue_max"], F.lit("10")),
         F.when((F.col("n_fishers") == 0) & (F.col("catch_outcome") == "1"), F.lit("11")),
         sep=",",
     )
-    return indicators.select("submission_id", flags.alias("alert_flag_composite"))
 
 
-def merge_flag_stages(flags_stage1: DataFrame, composite: DataFrame) -> DataFrame:
-    """Full-join merge of the two flag stages per submission
-    (R/validation.R:402-430): both non-NULL → comma-combined."""
-    merged = flags_stage1.join(composite, "submission_id", "full")
-    combined = F.when(
-        F.col("alert_flag").isNotNull() & F.col("alert_flag_composite").isNotNull(),
-        F.concat_ws(",", F.col("alert_flag"), F.col("alert_flag_composite")),
-    ).otherwise(F.coalesce(F.col("alert_flag"), F.col("alert_flag_composite")))
-    return merged.select(
-        "submission_id", "submission_date", combined.alias("alert_flag")
+def survey_indicators(preprocessed: DataFrame) -> DataFrame:
+    """Per-trip indicators over every row of every submission.
+
+    Catch outcome "0" zeroes catch AND price only on the indicator path
+    (R/validation.R:291-302, post-flagging) — otherwise a zero-catch
+    trip with a recorded price fires flag 8 via Inf."""
+    zero = F.col("catch_outcome") == "0"
+    return trip_indicators(
+        preprocessed.withColumn(
+            "catch_kg", F.when(zero, F.lit(0.0)).otherwise(F.col("catch_kg"))
+        ).withColumn(
+            "catch_price", F.when(zero, F.lit(0.0)).otherwise(F.col("catch_price"))
+        )
     )
 
 
@@ -266,53 +280,52 @@ def validate_surveys(
 
     Returns ``(validated, flags)``: ``flags`` is one row per submission
     with its consolidated alert string across both stages; ``validated``
-    excludes every flagged submission (anti join, J7) and carries the
-    per-trip composite indicators.
+    excludes every flagged submission and carries the per-trip
+    composite indicators.  Both are projections of ONE per-submission
+    frame (module docstring): the stage-1 rollup joined 1:1 on the id
+    to the indicators of all rows.
     """
     # stage-1 flags run on the ORIGINAL columns: the reference computes
     # the rule battery before any normalization, so an outcome-0 row
     # with a recorded taxon and positive catch_kg does NOT fire flag 2
     # (zeroing catch first would fabricate the kg<=0 condition)
     with_bounds = attach_taxa_bounds(preprocessed, taxa_bounds)
-    flagged = apply_rule_flags(with_bounds, rules or reference_rule_flags(thresholds))
-    flags_stage1 = consolidate_flags(flagged)
-
-    # catch outcome "0" zeroes catch AND price only on the indicator
-    # path (R/validation.R:291-302, post-flagging) — otherwise a
-    # zero-catch trip with a recorded price fires flag 8 via Inf
-    zero = F.col("catch_outcome") == "0"
-    indicator_input = preprocessed.withColumn(
-        "catch_kg", F.when(zero, F.lit(0.0)).otherwise(F.col("catch_kg"))
-    ).withColumn(
-        "catch_price", F.when(zero, F.lit(0.0)).otherwise(F.col("catch_price"))
+    stage1 = consolidate_flags(
+        apply_rule_flags(with_bounds, rules or reference_rule_flags(thresholds))
     )
-
-    # stage 2 runs ONLY on submissions with no stage-1 flag.  Derive
-    # that set by anti-joining the FLAGGED ids (the rare side — AQE can
-    # broadcast it when it is actually small) instead of semi-joining a
-    # force-broadcast complement: the no-flag set has submission
-    # cardinality, an unbounded driver collect at scale.
-    flagged_ids = flags_stage1.filter(
-        F.col("alert_flag").isNotNull()
-    ).select("submission_id")
-    # NULL-keyed rows never match either join flavor: the old semi join
-    # DROPPED them while an anti join would KEEP them — filter
-    # explicitly so the stage-2 population is unchanged
-    clean_stage1 = anti_join(
-        indicator_input.filter(F.col("submission_id").isNotNull()),
-        flagged_ids,
-        "submission_id",
-        broadcast_keys=False,
+    indicators = survey_indicators(preprocessed)
+    s, i = stage1.alias("s"), indicators.alias("i")
+    # both sides are grouped by submission_id, so the join is 1:1; the
+    # null-safe key pairs the NULL-id groups too
+    per_sub = s.join(
+        i, F.col("s.submission_id").eqNullSafe(F.col("i.submission_id"))
     )
-    indicators = trip_indicators(clean_stage1)
-    composite = composite_indicator_flags(indicators, thresholds)
-
-    flags = merge_flag_stages(flags_stage1, composite)
-    bad_ids = flags.filter(F.col("alert_flag").isNotNull()).select("submission_id")
-    clean = anti_join(
-        indicator_input, bad_ids, "submission_id", broadcast_keys=False
+    sid = F.col("s.submission_id")
+    alert = F.coalesce(
+        F.col("s.alert_flag"),
+        F.when(sid.isNotNull(), composite_flag(thresholds)),
     )
-    return trip_indicators(clean), flags
+    frame = per_sub.select(
+        sid.alias("submission_id"),
+        F.col("s.submission_date").alias("submission_date"),
+        alert.alias("alert_flag"),
+        *[F.col(f"i.{c}").alias(c) for c in indicators.columns[1:]],
+    )
+    flags = frame.select("submission_id", "submission_date", "alert_flag")
+    validated = frame.filter(
+        F.col("alert_flag").isNull() | F.col("submission_id").isNull()
+    ).select(*indicators.columns)
+    return validated, flags
+
+
+def validated_from_flags(preprocessed: DataFrame, flags: DataFrame) -> DataFrame:
+    """``validated`` rebuilt against an already-written flags table:
+    the indicators of every submission minus the flagged ids.  Exact
+    for the ``flags`` output of :func:`validate_surveys` over the same
+    ``preprocessed``: flagged ids are non-NULL or never match, and the
+    flags table holds one row per id, so no ``distinct`` is needed."""
+    bad = flags.filter(F.col("alert_flag").isNotNull()).select("submission_id")
+    return survey_indicators(preprocessed).join(bad, "submission_id", "left_anti")
 
 
 def explode_flags(flags: DataFrame) -> DataFrame:

@@ -866,77 +866,13 @@ for _n in _REPLACED_R14:
 # queries with several green driver rounds (still covered by the
 # bit-exact local gate, tools/check_correctness.py) rotate out.
 _VERIFY_FIRST = [
-    # r15 rotation (VERDICT r14 Next #3): a PURE head/tail swap — the
-    # 50 rows that rested through r14 (driver-green in r13) come back
-    # to the head so CORRECTNESS_r15 gives every one a hard driver
-    # row; the 50 r14-verified rows rest in the tail.  NO composition
-    # change: r15 is an optimization round (registrations are feature
-    # work, and removing a bench row is a regression by contract), so
-    # the staged registry_staged_r15 promotion stays staged for the
-    # next build round.
-    "pca_cov",
-    "audio_fp",
-    "corpus_card",
-    "docmeta_audit",
-    "retrieval_audit",
-    "capsel_audit",
-    "crawlfam_audit",
-    "nearest_audit",
-    "geofam_audit",
-    "release_fold",
-    "governance_audit",
-    "neardup_audit",
-    "lexstats_audit",
-    "ivf_audit",
-    "html_extract",
-    "link_graph",
-    "image_dups",
-    "summary_audit",
-    "lang_segment",
-    "drift_audit",
-    "funnel_cohorts",
-    "train_shards",
-    "aug_audit",
-    "set_ops_audit",
-    "format_audit",
-    "window_audit",
-    "split_mix_audit",
-    "rank_audit",
-    "ann_audit",
-    "reshape_audit",
-    "corpus_shuffle",
-    "dup_span_audit",
-    "trip_rollup",
-    "bpe_fertility",
-    "semantic_dedup",
-    "predominant_mode",
-    "metrics_table",
-    "domain_mix",
-    "monthly_median",
-    "topk_other",
-    "robust_bounds",
-    "nary_full_join",
-    "flag_battery_full",
-    "repetition_filter",
-    "decontamination",
-    "doc_chunks",
-    "nested_series",
-    "uniqueness_check",
-    "sessionization",
-    "asof_join",
-]
-# Rotation tail.  Sitting out one round keeps the "hard driver row at
-# least every 2 rounds" invariant; the assertion below forces this
-# list to be resized whenever queries are added, so the rotation stays
-# deliberate.  Window arithmetic note: a 50-slot window with a 2-round
-# cadence supports at most 50 rotating-in rows per round — adding N
-# new rows in a round therefore requires N consolidations/drops WITHIN
-# the rotating-in set (not the outgoing head, whose survivors rest in
-# the tail regardless).
-_VERIFY_LAST = [
-    # the 50 r14-head rows — every one driver-green in CORRECTNESS_r14
-    # (50/50 rows+schema+hash).  They rest this round and rotate back
-    # at r16.
+    # r16 rotation: a PURE head/tail swap — the 50 rows that rested
+    # through r15 (green in CORRECTNESS_r14) come back to the head,
+    # among them the five rewritten while outside the window
+    # (bandpairs_audit, dedupfam_audit, diversity_sample,
+    # sketchfam_audit, weights_audit), so each gets a hard verification
+    # row; the 50 r15-verified rows rest in the tail.  NO composition
+    # change.
     "bandpairs_audit",
     "dedupfam_audit",
     "main_content_audit",
@@ -987,6 +923,68 @@ _VERIFY_LAST = [
     "last_wins",
     "json_extract",
     "token_rollup",
+]
+# Rotation tail.  Sitting out one round keeps the "hard verified row at
+# least every 2 rounds" invariant; the assertion below forces this
+# list to be resized whenever queries are added, so the rotation stays
+# deliberate.  Window arithmetic note: a 50-slot window with a 2-round
+# cadence supports at most 50 rotating-in rows per round — adding N
+# new rows in a round therefore requires N consolidations/drops WITHIN
+# the rotating-in set (not the outgoing head, whose survivors rest in
+# the tail regardless).
+_VERIFY_LAST = [
+    # the 50 r15-head rows — verified in CORRECTNESS_r15.  They rest
+    # this round and rotate back at r17.
+    "pca_cov",
+    "audio_fp",
+    "corpus_card",
+    "docmeta_audit",
+    "retrieval_audit",
+    "capsel_audit",
+    "crawlfam_audit",
+    "nearest_audit",
+    "geofam_audit",
+    "release_fold",
+    "governance_audit",
+    "neardup_audit",
+    "lexstats_audit",
+    "ivf_audit",
+    "html_extract",
+    "link_graph",
+    "image_dups",
+    "summary_audit",
+    "lang_segment",
+    "drift_audit",
+    "funnel_cohorts",
+    "train_shards",
+    "aug_audit",
+    "set_ops_audit",
+    "format_audit",
+    "window_audit",
+    "split_mix_audit",
+    "rank_audit",
+    "ann_audit",
+    "reshape_audit",
+    "corpus_shuffle",
+    "dup_span_audit",
+    "trip_rollup",
+    "bpe_fertility",
+    "semantic_dedup",
+    "predominant_mode",
+    "metrics_table",
+    "domain_mix",
+    "monthly_median",
+    "topk_other",
+    "robust_bounds",
+    "nary_full_join",
+    "flag_battery_full",
+    "repetition_filter",
+    "decontamination",
+    "doc_chunks",
+    "nested_series",
+    "uniqueness_check",
+    "sessionization",
+    "asof_join",
 ]
 # The driver hard-verifies exactly the first 50 entries; the tail list
 # must therefore hold exactly (total − 50) queries or the window

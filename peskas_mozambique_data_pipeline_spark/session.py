@@ -220,9 +220,15 @@ def overlap_builds(*thunks):
     lets Spark's scheduler back-fill: leg B's checkpoint tasks run on
     the cores leg A's straggler tasks freed.  Results are identical by
     construction — each leg runs the exact same jobs, only their wall
-    clocks overlap (job descriptions stay correct per thread; the one
-    session-global conf toggle, partitioned_checkpoint's AQE scope, is
-    serialized by ``_AQE_TOGGLE_LOCK``).
+    clocks overlap (the one session-global conf toggle,
+    partitioned_checkpoint's AQE scope, is serialized by
+    ``_AQE_TOGGLE_LOCK``).
+
+    Spark keeps job group and description in JVM thread-local
+    properties, which a plain pool thread does not carry over: each
+    thunk is therefore wrapped with ``inheritable_thread_target``, so
+    the leg jobs run under the caller's job group and description and
+    are attributed to the query that built them.
 
     Returns the thunk results in argument order.  With one thunk (or
     ``SPARK_GRAFT_OVERLAP=0`` for A/B measurement) it degrades to the
@@ -232,6 +238,11 @@ def overlap_builds(*thunks):
         return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    spark = SparkSession.active()
     with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
         return [f.result() for f in futures]

@@ -40,7 +40,7 @@ from ..operators.sketches import (
     bloom_probe,
 )
 from .dedup_index import _dir_ids
-from .freq_ledger import _read_parts
+from .distinct_ledger import _read_parts
 
 BLOOM_SUBDIR = "bloom_packs"
 BLOOM_COMPACT_SUBDIR = "bloom_packs_compacted"
@@ -128,7 +128,8 @@ def stream_bloom_ledger(
         )
         if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
             parts = _read_parts(
-                spark, packs_dir, compact_dir, upto=batch_id - 1
+                spark, packs_dir, compact_dir, upto=batch_id - 1,
+                schema=packed.schema,
             )
             if parts is not None:
                 folded = bloom_merge(parts, g)

@@ -175,7 +175,10 @@ def stream_cdc_zone(
         )
 
         if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
-            parts = _read_parts(spark, cdc_dir, compact_dir, upto=batch_id - 1)
+            parts = _read_parts(
+                spark, cdc_dir, compact_dir, upto=batch_id - 1,
+                schema=batch_df.schema,
+            )
             if parts is not None:
                 win = _winners(
                     parts, k, seq_col, op_col, upsert_op, delete_op,

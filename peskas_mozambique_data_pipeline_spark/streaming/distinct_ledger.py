@@ -37,6 +37,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.sketches import hll_estimate, hll_registers
 from .dedup_index import _dir_ids
@@ -47,31 +48,38 @@ REG_COMPACT_SUBDIR = "hll_regs_compacted"
 
 def _read_parts(
     spark: SparkSession,
-    reg_dir: str,
+    part_dir: str,
     compact_dir: str,
     upto: int | None = None,
+    schema: StructType | None = None,
 ) -> DataFrame | None:
-    """All live register rows: newest snapshot + surviving deltas
-    (optionally only batches ≤ ``upto``), unfolded."""
-    frames = []
+    """All live rows of a compacting ledger, unfolded: the newest
+    ``upto=<id>`` snapshot plus the ``batch=<b>`` deltas AFTER it
+    (optionally only batches ≤ ``upto``).
+
+    Skipping deltas ≤ the snapshot id is what keeps a SUM monoid
+    double-count-free: a crash between the snapshot write and the
+    delete, or a replayed batch, leaves deltas the snapshot already
+    covers, and they are never read again.
+
+    Snapshot and deltas share one schema (the fold keeps the delta's
+    columns and types; pytest-pinned per ledger), so the parts are read
+    as ONE multi-path parquet scan: one file listing and at most one
+    schema-inference job, however many parts are live.  A caller that
+    just wrote a delta passes its ``schema`` and the read infers
+    nothing."""
     snaps = _dir_ids(compact_dir, "upto")
-    snap_id = max(snaps) if snaps else None
-    if snap_id is not None:
-        frames.append(
-            spark.read.parquet(os.path.join(compact_dir, f"upto={snap_id}"))
-        )
-    for b in _dir_ids(reg_dir, "batch"):
-        if snap_id is not None and b <= snap_id:
-            continue
-        if upto is not None and b > upto:
-            continue
-        frames.append(spark.read.parquet(os.path.join(reg_dir, f"batch={b}")))
-    if not frames:
+    snap_id = snaps[-1] if snaps else None
+    paths = [] if snap_id is None else [os.path.join(compact_dir, f"upto={snap_id}")]
+    paths += [
+        os.path.join(part_dir, f"batch={b}")
+        for b in _dir_ids(part_dir, "batch")
+        if (snap_id is None or b > snap_id) and (upto is None or b <= upto)
+    ]
+    if not paths:
         return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 def read_registers(
@@ -132,7 +140,7 @@ def stream_distinct_ledger(
 
         if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
             parts = _read_parts(
-                spark, reg_dir, compact_dir, upto=batch_id - 1
+                spark, reg_dir, compact_dir, upto=batch_id - 1, schema=regs.schema
             )
             if parts is not None:
                 folded = parts.groupBy(*g, "j").agg(F.max("r").alias("r"))

@@ -102,12 +102,15 @@ def stream_dq_ledger(
     rules = list(rules)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        _delta(batch_df, rules, g).write.mode("overwrite").parquet(
+        delta = _delta(batch_df, rules, g)
+        delta.write.mode("overwrite").parquet(
             os.path.join(dq_dir, f"batch={batch_id}")
         )
 
         if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
-            parts = _read_parts(spark, dq_dir, compact_dir, upto=batch_id - 1)
+            parts = _read_parts(
+                spark, dq_dir, compact_dir, upto=batch_id - 1, schema=delta.schema
+            )
             if parts is not None:
                 _fold(parts, g).write.mode("overwrite").parquet(
                     os.path.join(compact_dir, f"upto={batch_id - 1}")

@@ -49,42 +49,11 @@ from pyspark.sql import functions as F
 
 from ..operators.sketches import cms_lookup, cms_sketch
 from .dedup_index import _dir_ids
+from .distinct_ledger import _read_parts
 
 CELLS_SUBDIR = "cms_cells"
 CELLS_COMPACT_SUBDIR = "cms_cells_compacted"
 CANDS_SUBDIR = "hh_cands"
-
-
-def _read_parts(
-    spark: SparkSession,
-    cells_dir: str,
-    compact_dir: str,
-    upto: int | None = None,
-) -> DataFrame | None:
-    """All live cell rows: newest snapshot + deltas AFTER it
-    (optionally only batches ≤ ``upto``), unfolded.  Skipping deltas
-    ≤ the snapshot id is what keeps the SUM monoid double-count-free."""
-    frames = []
-    snaps = _dir_ids(compact_dir, "upto")
-    snap_id = max(snaps) if snaps else None
-    if snap_id is not None:
-        frames.append(
-            spark.read.parquet(os.path.join(compact_dir, f"upto={snap_id}"))
-        )
-    for b in _dir_ids(cells_dir, "batch"):
-        if snap_id is not None and b <= snap_id:
-            continue
-        if upto is not None and b > upto:
-            continue
-        frames.append(
-            spark.read.parquet(os.path.join(cells_dir, f"batch={b}"))
-        )
-    if not frames:
-        return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
 
 
 def read_cells(
@@ -225,7 +194,8 @@ def stream_freq_ledger(
 
         if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
             parts = _read_parts(
-                spark, cells_dir, compact_dir, upto=batch_id - 1
+                spark, cells_dir, compact_dir, upto=batch_id - 1,
+                schema=cells.schema,
             )
             if parts is not None:
                 folded = parts.groupBy(*g, "i", "cell").agg(

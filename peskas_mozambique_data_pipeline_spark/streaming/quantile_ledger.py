@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators.sketches import HDR_SUB_BITS, hdr_histogram, hdr_quantiles
 from .dedup_index import _dir_ids
-from .freq_ledger import _read_parts
+from .distinct_ledger import _read_parts
 
 HIST_SUBDIR = "hdr_hist"
 HIST_COMPACT_SUBDIR = "hdr_hist_compacted"
@@ -90,7 +90,8 @@ def stream_quantile_ledger(
         )
         if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
             parts = _read_parts(
-                spark, hist_dir, compact_dir, upto=batch_id - 1
+                spark, hist_dir, compact_dir, upto=batch_id - 1,
+                schema=hist.schema,
             )
             if parts is not None:
                 folded = parts.groupBy(*g, "bucket", "lo").agg(

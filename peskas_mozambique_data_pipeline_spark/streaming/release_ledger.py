@@ -105,13 +105,15 @@ def stream_release_ledger(
     g = list(group_cols)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        _delta(batch_df, g).write.mode("overwrite").parquet(
+        delta = _delta(batch_df, g)
+        delta.write.mode("overwrite").parquet(
             os.path.join(fold_dir, f"batch={batch_id}")
         )
 
         if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
             parts = _read_parts(
-                spark, fold_dir, compact_dir, upto=batch_id - 1
+                spark, fold_dir, compact_dir, upto=batch_id - 1,
+                schema=delta.schema,
             )
             if parts is not None:
                 _fold(parts, g).write.mode("overwrite").parquet(

@@ -225,7 +225,10 @@ def stream_rollup_zone(
         ]
         new = winners.filter(F.col(op_col) == upsert_op).select(*payload)
 
-        state = _read_parts(spark, cdc_dir, compact_cdc, upto=batch_id - 1)
+        state = _read_parts(
+            spark, cdc_dir, compact_cdc, upto=batch_id - 1,
+            schema=batch_df.schema,
+        )
         if state is None:
             old = new.limit(0)
         else:
@@ -248,7 +251,9 @@ def stream_rollup_zone(
 
         if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
             upto = batch_id - 1
-            parts = _read_parts(spark, cdc_dir, compact_cdc, upto=upto)
+            parts = _read_parts(
+                spark, cdc_dir, compact_cdc, upto=upto, schema=batch_df.schema
+            )
             if parts is not None:
                 win = _winners(
                     parts, k, seq_col, op_col, upsert_op, delete_op,

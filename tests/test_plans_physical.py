@@ -167,6 +167,49 @@ def test_validate_surveys_no_forced_broadcast_in_dag(spark):
         assert "ResolvedHint" not in analyzed, "forced broadcast hint in validation DAG"
 
 
+def test_validate_plan_one_frame_and_flags_zone(spark, tmp_path):
+    # both outputs are projections of ONE per-submission frame: the
+    # flags plan carries no full-outer merge of the flag stages and
+    # only the two per-submission aggregates' exchanges; validated,
+    # rebuilt against the written flags zone, scans preprocessed once
+    import datetime
+
+    from peskas_mozambique_data_pipeline_spark.plans import validate as val
+
+    pre_dir = str(tmp_path / "preprocessed")
+    spark.createDataFrame(
+        [
+            (
+                "s1", "1", "1", "SNA", 30.0, 5.0, 2.0, 10.0, 10.0, 6.0,
+                3.0, 100.0, datetime.datetime(2024, 3, 10, 18, 0),
+                datetime.datetime(2024, 3, 10, 6, 0), "handline", "Reef", "Palma",
+            )
+        ],
+        "submission_id string, survey_activity string, catch_outcome string, "
+        "catch_taxon string, length double, n_individuals double, "
+        "n_buckets double, weight_bucket double, catch_kg double, "
+        "trip_duration double, n_fishers double, catch_price double, "
+        "submission_date timestamp, landing_date timestamp, "
+        "gear_type string, habitat string, district string",
+    ).write.parquet(pre_dir)
+    pre = spark.read.parquet(pre_dir)
+    _, flags = val.validate_surveys(pre)
+    plan = plan_of(flags, "simple")
+    assert "FullOuter" not in plan
+    assert plan.count("Exchange hashpartitioning") <= 2
+
+    flags_dir = str(tmp_path / "flags")
+    flags.write.parquet(flags_dir)
+    validated = val.validated_from_flags(pre, spark.read.parquet(flags_dir))
+    scans = [
+        ln for ln in plan_of(validated, "simple").splitlines()
+        if "FileScan parquet" in ln
+    ]
+    # told apart by column (long locations are truncated in the plan)
+    assert sum("catch_outcome" in ln for ln in scans) == 1
+    assert sum("alert_flag" in ln for ln in scans) == 1
+
+
 def test_decontamination_broadcasts_benchmark_no_smj(spark):
     # the benchmark gram set must broadcast; the corpus must never
     # shuffle on a sort-merge join (hits-only aggregation)

@@ -85,3 +85,36 @@ def test_triangle_self_join_exact_and_distributed(spark):
     max_part = max(sizes.values())
     worst_cell = max_part * max_part
     assert worst_cell < (n * (n - 1)) // 2  # strictly better than one hot key
+
+
+def test_overlap_builds_legs_inherit_job_group(spark, monkeypatch):
+    # leg jobs run on pool threads: they must carry the caller's job
+    # group and description, or a per-query job attribution misses them
+    from peskas_mozambique_data_pipeline_spark.session import overlap_builds
+
+    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", "1")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "overlap-builds-legs"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+
+    def leg(n):
+        def build():
+            seen = (
+                sc.getLocalProperty("spark.jobGroup.id"),
+                sc.getLocalProperty("spark.job.description"),
+            )
+            return seen, spark.range(n).count()
+        return build
+
+    sc.setJobGroup(group, "overlap legs")
+    try:
+        got = overlap_builds(leg(10), leg(20))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    seen = (group, "overlap legs")
+    assert got == [(seen, 10), (seen, 20)]
+    assert len(tracker.getJobIdsForGroup(group)) >= 2
+    # no leg job escaped the group (old jobs may age out of the store)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped

@@ -218,3 +218,138 @@ def test_rule_flags_ride_expectations_one_projection(spark, tmp_path):
     assert rplan.count("Scan parquet") == 1
     got = {r.rule: r.n_violations for r in rep.collect()}
     assert got["1"] == 1 and got["13"] == 1 and got["5"] == 0
+
+
+# --- fused validation ≡ the two-stage formulation ----------------------
+
+
+def _reference_validate(preprocessed, taxa_bounds=None, thresholds=None):
+    """The two-stage formulation ``validate_surveys`` replaced, kept as
+    the reference: stage 2 on the anti-join survivors of stage 1, a
+    full-join merge of both flag stages, then an anti join of every
+    flagged id."""
+    t = {**val.THRESHOLDS, **(thresholds or {})}
+    with_bounds = val.attach_taxa_bounds(preprocessed, taxa_bounds)
+    flagged = val.apply_rule_flags(with_bounds, val.reference_rule_flags(thresholds))
+    flags_stage1 = val.consolidate_flags(flagged)
+
+    zero = F.col("catch_outcome") == "0"
+    indicator_input = preprocessed.withColumn(
+        "catch_kg", F.when(zero, F.lit(0.0)).otherwise(F.col("catch_kg"))
+    ).withColumn(
+        "catch_price", F.when(zero, F.lit(0.0)).otherwise(F.col("catch_price"))
+    )
+    flagged_ids = flags_stage1.filter(
+        F.col("alert_flag").isNotNull()
+    ).select("submission_id").distinct()
+    clean_stage1 = indicator_input.filter(
+        F.col("submission_id").isNotNull()
+    ).join(flagged_ids, "submission_id", "left_anti")
+
+    ind = val.trip_indicators(clean_stage1)
+    price_inf = (F.col("catch_kg") == 0) & (F.col("catch_price") > 0)
+    composite = ind.select(
+        "submission_id",
+        F.concat_ws(
+            ",",
+            F.when(price_inf | (F.col("price_per_kg") > t["price_kg_max"]), F.lit("8")),
+            F.when(F.col("cpue") > t["cpue_max"], F.lit("9")),
+            F.when(F.col("rpue") > t["rpue_max"], F.lit("10")),
+            F.when((F.col("n_fishers") == 0) & (F.col("catch_outcome") == "1"),
+                   F.lit("11")),
+        ).alias("c"),
+    ).withColumn("c", F.when(F.col("c") != "", F.col("c")))
+
+    merged = flags_stage1.join(composite, "submission_id", "full")
+    combined = F.when(
+        F.col("alert_flag").isNotNull() & F.col("c").isNotNull(),
+        F.concat_ws(",", F.col("alert_flag"), F.col("c")),
+    ).otherwise(F.coalesce(F.col("alert_flag"), F.col("c")))
+    flags = merged.select(
+        "submission_id", "submission_date", combined.alias("alert_flag")
+    )
+    bad_ids = flags.filter(
+        F.col("alert_flag").isNotNull()
+    ).select("submission_id").distinct()
+    clean = indicator_input.join(bad_ids, "submission_id", "left_anti")
+    return val.trip_indicators(clean), flags
+
+
+def _adversarial(spark, null_group: str):
+    """Duplicated ids (several catch rows per trip), a NULL-id group,
+    outcome "0" with a price, and trips flagged only by flags 8–11.
+    ``null_group`` picks whether the NULL-id rows fire a stage-1 flag
+    or would fire only a composite one."""
+    rows = [
+        _row("a", catch_kg=4.0, length=30.0),
+        _row("a", catch_kg=6.0, length=31.0, catch_taxon="OCZ"),
+        _row("b", length=30.0),
+        _row("b", length=10.0),            # 3 only under the duplicate SNA bound
+        _row("z0", catch_outcome="0", catch_kg=5.0, catch_price=100.0),
+        _row("z1", catch_outcome="0", catch_taxon=None, length=None,
+             catch_kg=None, catch_price=250.0),
+        _row("p8", catch_price=30000.0),
+        _row("p9", catch_kg=300.0),
+        _row("p9", catch_kg=300.0),        # cpue 600/18 > 30 only summed
+        _row("p10", catch_price=40000.0, catch_kg=20.0, n_fishers=1.0),
+        _row("p11", n_fishers=0.0),
+        _row("p8_9", catch_kg=0.0, catch_price=2e6, n_buckets=1.0),
+        _row("p8_9", catch_kg=700.0, catch_price=2e6, n_buckets=1.0),
+        _row("mix", weight_bucket=60.0, catch_price=90000.0),
+        _row("mix", n_fishers=3.0, catch_price=90000.0),
+        _row("lo", catch_price=3.0, catch_kg=0.5, trip_duration=9.0),
+    ]
+    if null_group == "stage1":
+        rows += [
+            _row(None, catch_kg=2.0),
+            _row(None, catch_kg=3.0, weight_bucket=60.0),   # flag 5
+        ]
+    else:
+        rows += [
+            _row(None, catch_kg=2.0, catch_price=90000.0),  # composite 8 only
+            _row(None, catch_kg=3.0, catch_price=90000.0),
+        ]
+    return spark.createDataFrame(rows, COLS)
+
+
+def _rounded(df):
+    out = []
+    for r in df.collect():
+        out.append(tuple(round(v, 9) if isinstance(v, float) else v for v in r))
+    return sorted(out, key=repr)
+
+
+@pytest.mark.parametrize(
+    "null_group, thresholds, dup_bounds",
+    [
+        ("stage1", None, True),
+        ("composite", {"price_kg_max": 40.0, "cpue_max": 0.5,
+                       "rpue_max": 3.0, "max_trip_hours": 8.0}, True),
+        ("composite", None, False),
+    ],
+)
+def test_fused_validation_equals_two_stage_reference(
+    spark, null_group, thresholds, dup_bounds
+):
+    df = _adversarial(spark, null_group)
+    bounds = spark.createDataFrame(
+        [("SNA", 5.0, 60.0), ("SNA", 20.0, 40.0), ("OCZ", 1.0, 10.0)],
+        "catch_taxon string, min_length double, max_length_75 double",
+    ) if dup_bounds else None
+    want_v, want_f = _reference_validate(df, bounds, thresholds)
+    got_v, got_f = val.validate_surveys(df, taxa_bounds=bounds, thresholds=thresholds)
+
+    assert got_f.columns == want_f.columns
+    assert got_v.columns == want_v.columns
+    assert got_v.schema == want_v.schema
+    assert sorted(got_f.collect(), key=repr) == sorted(want_f.collect(), key=repr)
+    assert _rounded(got_v) == _rounded(want_v)
+    # the frames above are adversarial only if they exercise every branch
+    fm = {r.submission_id: r.alert_flag for r in got_f.collect()}
+    assert fm[None] is not None if null_group == "stage1" else fm[None] is None
+    assert None in {r.submission_id for r in got_v.collect()}
+    if thresholds is None:
+        assert fm["p8"] == "8" and fm["p9"] == "9" and fm["p10"] == "10"
+        assert fm["p11"] == "11" and fm["p8_9"] == "8,9,10" and fm["mix"] == "5"
+        assert fm["z0"] is None and fm["z1"] is None
+        assert fm["b"] == ("3" if dup_bounds else None)
