@@ -605,46 +605,17 @@ SELECT stat, CAST(doc_id AS VARCHAR), k2, k3, p FROM sm
 
 
 def q_ivf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r15 (guide §2.4): the two legs each called their registered
-    # function, and each function ran sim.build_ivf_index(emb, 8, 2) —
-    # TWO textually-separate copies of the coarse-quantizer Lloyd
-    # subtree in one unioned plan, deduped only as far as ReuseExchange
-    # reaches.  Build the IVF index ONCE and hand the SAME
-    # (assignments, centroids) frames to both legs: identical
-    # operators, identical parameters, bit-identical rows (parity
-    # collect-hashed against the two-build form at sf0.1), one Lloyd
-    # chain in the plan.  NO checkpoint on either frame — measured
-    # slower in every combination (cp assign 4.31 s, cp cents 5.09 s
-    # vs 3.54 s shared / 3.89 s two-build at sf0.1): eager
-    # materialization breaks the ReuseExchange sharing and adds jobs
-    # (the r14 finding, re-confirmed).  A LAZY repartition barrier on
-    # assignments (so both probe pipelines reuse one exchange) was also
-    # A/B'd (r15, 4 alternating rounds): min totals 3.31 vs 3.26 s —
-    # inside noise, and at scale it is a corpus-width shuffle bought to
-    # skip re-running a scan + broadcast join; stays out.
-    from .operators import similarity as sim
-    from .registry_curation import _PQ_K, _PQ_M
-    from .session import read_table
+    from .registry_curation import q_ann_ivfpq
+    from .registry_text import q_ann_ivf
 
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    assignments, centroids = sim.build_ivf_index(emb, n_centroids=8, n_iters=2)
-    a = sim.ivf_topk(queries, assignments, centroids, k=5, n_probe=2).select(
+    a = q_ann_ivf(spark, sf_dir).select(
         F.lit("ivf").alias("stat"),
         F.col("query_id").cast(_L).alias("query_id"),
         F.col("neighbor_id").cast(_L).alias("neighbor_id"),
         F.col("rank").cast("int").alias("rank"),
         F.col("cosine_sim").cast(_D).alias("v"),
     )
-    pq_codes, pq_books = sim.build_pq_index(
-        emb, m=_PQ_M, k=_PQ_K, n_iters=2, dim=64
-    )
-    b = sim.ivfpq_topk(
-        queries, assignments, centroids, pq_codes, pq_books,
-        k_nn=5, n_probe=2, m=_PQ_M, k=_PQ_K, dim=64,
-    ).select(
+    b = q_ann_ivfpq(spark, sf_dir).select(
         F.lit("ivfpq").alias("stat"),
         F.col("query_id").cast(_L).alias("query_id"),
         F.col("neighbor_id").cast(_L).alias("neighbor_id"),

@@ -230,11 +230,10 @@ def overlap_builds(*thunks):
     the leg jobs run under the caller's job group and description and
     are attributed to the query that built them.
 
-    Returns the thunk results in argument order.  With one thunk (or
-    ``SPARK_GRAFT_OVERLAP=0`` for A/B measurement) it degrades to the
-    sequential build.
+    Returns the thunk results in argument order.  With one thunk it
+    degrades to the sequential build.
     """
-    if len(thunks) == 1 or os.environ.get("SPARK_GRAFT_OVERLAP", "1") == "0":
+    if len(thunks) == 1:
         return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 

@@ -121,3 +121,29 @@ def test_check_empty_frame_reports_zero_not_null(spark):
     assert len(rows) == 3
     for r in rows:
         assert r.n_violations == 0 and r.n_rows == 0 and r.frac == 0.0
+
+
+def test_annotate_lists_every_failed_rule_and_report_matches_parts(spark):
+    df = _fixture(spark).unionByName(
+        spark.createDataFrame(
+            [(7, -1.0, -2, "weird", "a")],  # fails all three rules
+            "id long, price double, qty long, status string, ref string",
+        )
+    )
+    ann = {r.id: r.violations for r in dq.annotate(df, _rules()).collect()}
+    assert ann[7] == ["price_positive", "qty_nonneg", "status_known"]
+    assert ann[1] == []
+    dim = spark.createDataFrame([("a",), ("b",)], "k string")
+    rep = {
+        r.rule: r.n_violations
+        for r in dq.full_report(
+            df, rules=_rules(), unique_keys=[["id"]], dims=[("ref", dim, "k")]
+        ).collect()
+    }
+    parts = [
+        dq.check(df, _rules()),
+        dq.expect_unique(df, ["id"]),
+        dq.expect_in_dim(df, "ref", dim, "k"),
+    ]
+    assert rep == {r.rule: r.n_violations for p in parts for r in p.collect()}
+    assert rep["price_positive"] == 3 and rep["unique(id)"] == 2

@@ -89,7 +89,6 @@ def test_boundary_audit_margins_above_red_zone():
     assert set(results) == {
         "unigram_logloss", "bigram_logloss", "term_stats_pmi",
         "term_stats_tfidf", "dsir_weights", "token_drift", "bm25",
-        "hardneg_staged",
     }
     for name, r in results.items():
         assert r["n_values"] > 0, name

@@ -3,6 +3,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from peskas_mozambique_data_pipeline_spark.operators import joins
@@ -346,6 +347,10 @@ def test_kcore_known_graph_and_python_twin(spark):
     assert {r.n for r in kcore(df, 3).collect()} == {0, 1, 2, 3}
     assert {r.n for r in kcore(df, 2).collect()} == {0, 1, 2, 3, 20, 21, 22}
     assert kcore(df, 4).count() == 0  # 4-core empty: clique degrees are 3
+    # peeling the pendant path 3-10-11 takes two rounds: a partial peel
+    # must raise, never masquerade as the core
+    with pytest.raises(RuntimeError, match="did not converge"):
+        kcore(df, 2, max_iter=2)
     # input normalization: duplicates / reversed / self-loop edges
     noisy = df.unionAll(
         spark.createDataFrame([(1, 0), (5, 5), (0, 1)], "a long, b long")

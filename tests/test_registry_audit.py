@@ -14,15 +14,51 @@ registration — see NOTES r9).  What pytest adds on top:
    (Spark `conv(substring(md5,1,8),16,10) % dim`) equals the pure
    Python hashlib twin the driver-side fit uses, token for token;
 4. fit replay — clf_model() is a pure function of the embedded
-   training set: stable across calls and emitting only integer nanos.
+   training set: stable across calls and emitting only integer nanos;
+5. registry digest — one sha256 over the served and retired tables.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__
 from peskas_mozambique_data_pipeline_spark import registry, registry_audit
+
+# sha256 over the served table (order, function identity, oracle SQL) and
+# the retired table; any change to either must update this deliberately.
+REGISTRY_DIGEST = "6d5104651ade3160626727f8995fa6c36c699715739702e9a56d175e4caeb85a"
+
+
+def _sha(s: str) -> str:
+    return hashlib.sha256(s.encode()).hexdigest()
+
+
+def registry_digest() -> str:
+    h = hashlib.sha256()
+    sql = __spark_entry__.oracle_sql()
+    for name, fn in __spark_entry__.queries().items():
+        h.update(
+            f"{name}|{fn.__module__}|{fn.__qualname__}|{_sha(sql[name])}\n".encode()
+        )
+    h.update(b"--retired--\n")
+    for name in sorted(registry.RETIRED_QUERIES):
+        fn = registry.RETIRED_QUERIES[name]
+        h.update(
+            f"{name}|{fn.__module__}|{fn.__qualname__}|"
+            f"{_sha(registry.RETIRED_ORACLE_SQL[name])}\n".encode()
+        )
+    return h.hexdigest()
+
+
+def test_registry_digest():
+    # pins queries() order, every function identity, every oracle_sql()
+    # string and the RETIRED_* maps byte for byte
+    assert sorted(registry.RETIRED_QUERIES) == sorted(registry.RETIRED_ORACLE_SQL)
+    assert registry_digest() == REGISTRY_DIGEST
 
 
 def test_r16_window_arithmetic():

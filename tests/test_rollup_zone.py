@@ -170,3 +170,21 @@ def test_random_interleavings_congruent_with_state(spark, tmp_path):
          compact_every=5)
     assert _rollup(spark, zone) == _from_state(spark, zone)
     assert _rollup(spark, zone)  # non-degenerate: groups survive
+
+
+def test_contribution_delta_retracts_old_and_applies_new(spark):
+    # the old payloads of touched keys retract (−1) and the winning
+    # upserts apply (+1): groups only left net negative, groups only
+    # entered net positive, and a same-group replace nets its change
+    old = spark.createDataFrame(
+        [("seg_a", 10), ("seg_a", 5), ("seg_b", 7)], "grp string, cents long"
+    )
+    new = spark.createDataFrame(
+        [("prio_1", 4), ("prio_1", 6), ("seg_b", 9)], "grp string, cents long"
+    )
+    got = sorted(
+        tuple(r)
+        for r in rz._contribution_delta(old, new, ["grp"], ["cents"]).collect()
+    )
+    assert got == [("prio_1", 2, 10), ("seg_a", -2, -15), ("seg_b", 0, 2)]
+    assert sum(n for _g, n, _s in got) == new.count() - old.count()

@@ -87,12 +87,11 @@ def test_triangle_self_join_exact_and_distributed(spark):
     assert worst_cell < (n * (n - 1)) // 2  # strictly better than one hot key
 
 
-def test_overlap_builds_legs_inherit_job_group(spark, monkeypatch):
+def test_overlap_builds_legs_inherit_job_group(spark):
     # leg jobs run on pool threads: they must carry the caller's job
     # group and description, or a per-query job attribution misses them
     from peskas_mozambique_data_pipeline_spark.session import overlap_builds
 
-    monkeypatch.setenv("SPARK_GRAFT_OVERLAP", "1")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = "overlap-builds-legs"

@@ -212,52 +212,6 @@ stats AS (
 """
 
 
-def _hardneg_audit_sql() -> str:
-    """Staged hardneg_audit (registry_staged_r15): the same
-    FLOOR(idf·sat·1e9) class as bm25, but per (query, doc, term) over
-    the staged row's OWN query set and document frequencies — margins
-    must be measured on ITS values before registration, not inferred
-    from the bm25 watch.  Generated from the staged module's query
-    dict (imported, so they cannot desync)."""
-    from peskas_mozambique_data_pipeline_spark.registry_staged_r15 import (
-        _HN_QUERIES,
-        _HN_TOK,
-    )
-
-    k1, b = 1.2, 0.75  # pinned by the staged parity test
-    legs = []
-    for qid, terms in sorted(_HN_QUERIES.items()):
-        tf_defs = ",\n         ".join(
-            f"len(list_filter({_HN_TOK}, x -> x = '{t}')) AS tf{i}"
-            for i, t in enumerate(terms)
-        )
-        df_defs = ",\n         ".join(
-            f"CAST(SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS BIGINT)"
-            f" AS df{i}"
-            for i in range(len(terms))
-        )
-        legs.append(
-            f"base{qid} AS (SELECT doc_id, len({_HN_TOK}) AS dl,\n"
-            f"         {tf_defs} FROM documents),\n"
-            f"stats{qid} AS (SELECT SUM(dl) / COUNT(*) AS avgdl,\n"
-            f"         CAST(COUNT(*) AS DOUBLE) AS n, {df_defs}"
-            f" FROM base{qid})"
-        )
-    withs = ",\n".join(legs)
-    branch_sql = []
-    for qid, terms in sorted(_HN_QUERIES.items()):
-        for i in range(len(terms)):
-            branch_sql.append(
-                f"SELECT 'q{qid} ' || CAST(doc_id AS VARCHAR) || ' t{i}' AS key,\n"
-                f"       ln(1.0 + (n - df{i} + 0.5) / (df{i} + 0.5))"
-                f" * (tf{i} * {k1 + 1.0!r} / (tf{i} + {k1!r} * ({1.0 - b!r}"
-                f" + {b!r} * dl / avgdl))) AS b\n"
-                f"FROM base{qid}, stats{qid} WHERE tf{i} > 0"
-            )
-    unioned = "\nUNION ALL\n".join(branch_sql)
-    return f"WITH {withs}\n{unioned}"
-
-
 # name -> (sql, grain, kind)
 #
 # r10 coverage note: of the eleven rows registered in round 10
@@ -277,7 +231,6 @@ def audits() -> dict[str, tuple[str, float, str]]:
         "dsir_weights": (_DSIR, 1e9, "round"),
         "token_drift": (_DRIFT, 1e9, "round"),
         "bm25": (_bm25_audit_sql(), 1e9, "floor"),
-        "hardneg_staged": (_hardneg_audit_sql(), 1e9, "floor"),
     }
 
 

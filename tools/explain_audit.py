@@ -3,11 +3,6 @@ query (or the named ones) so scale properties can be eyeballed —
 PushedFilters, ReadSchema pruning, join strategies, exchange count.
 
 Usage: python tools/explain_audit.py [query ...] [--summary]
-       python tools/explain_audit.py --staged r15 [query ...] [--summary]
-
-``--staged rNN`` audits a STAGED module's rows instead of the live
-registry — pre-registration plan hygiene for the rotation recipe
-(alongside tools/staged_matrix.py's value evidence).
 """
 
 from __future__ import annotations
@@ -35,20 +30,10 @@ def plan_of(df) -> str:
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     summary = "--summary" in sys.argv
-    queries = registry.SPARK_QUERIES
-    if "--staged" in sys.argv:
-        import importlib
-
-        suffix = sys.argv[sys.argv.index("--staged") + 1]
-        args = [a for a in args if a != suffix]
-        mod = importlib.import_module(
-            f"peskas_mozambique_data_pipeline_spark.registry_staged_{suffix}"
-        )
-        queries = mod.STAGED_QUERIES
     only = set(args)
     spark = get_spark(shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    for name, fn in queries.items():
+    for name, fn in registry.SPARK_QUERIES.items():
         if only and name not in only:
             continue
         plan = plan_of(fn(spark, SF_DIR))
