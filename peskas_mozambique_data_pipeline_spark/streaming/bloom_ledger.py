@@ -7,9 +7,8 @@ OR-SEMILATTICE (``bloom_merge``): folding per-batch packed filters
 with bitwise OR equals the filter of the unioned inputs EXACTLY, so —
 like the HLL distinct ledger and unlike the SUM ledgers — replay
 safety is free: a batch folded twice ORs in the same bits.  The
-ledger still follows the house zone discipline (keyed ``batch=<id>``
-overwrites, ``upto=<id>`` snapshots, write-before-delete folds) so
-state stays bounded and any engine can read it.
+ledger still runs on the shared zone ledger (``streaming/ledger.py``)
+so state stays bounded and any engine can read it.
 
 The 100 TB use case is the crawl frontier's seen-set and
 cross-restart ingest dedup: the exact seen-set is unbounded, while
@@ -24,8 +23,6 @@ rebuild (geometry travels in the rows, so the probe asserts it).
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,8 +36,7 @@ from ..operators.sketches import (
     bloom_pack,
     bloom_probe,
 )
-from .dedup_index import _dir_ids
-from .distinct_ledger import _read_parts
+from .ledger import read_monoid_ledger, stream_monoid_ledger
 
 BLOOM_SUBDIR = "bloom_packs"
 BLOOM_COMPACT_SUBDIR = "bloom_packs_compacted"
@@ -52,14 +48,10 @@ def read_filter(
     """The ledger's current packed filter — OR-folded over snapshot +
     deltas, identical to one build over everything the stream has
     carried (the semilattice parity pytest pins)."""
-    parts = _read_parts(
-        spark,
-        os.path.join(zone_dir, BLOOM_SUBDIR),
-        os.path.join(zone_dir, BLOOM_COMPACT_SUBDIR),
+    return read_monoid_ledger(
+        spark, zone_dir, BLOOM_SUBDIR, BLOOM_COMPACT_SUBDIR,
+        lambda parts: bloom_merge(parts, group_cols),
     )
-    if parts is None:
-        return None
-    return bloom_merge(parts, group_cols)
 
 
 def ledger_probe(
@@ -105,56 +97,21 @@ def stream_bloom_ledger(
     m: int = BLOOM_M,
     k: int = BLOOM_K,
     salt: str = "bloom",
-    available_now: bool = True,
     compact_every: int | None = 8,
 ):
-    """Start the ledger query.  Returns ``(query, packs_dir)``.  Same
-    zone discipline as the sibling ledgers; the OR semilattice makes
-    even an accidental double-fold harmless (idempotent bits)."""
-    packs_dir = os.path.join(zone_dir, BLOOM_SUBDIR)
-    compact_dir = os.path.join(zone_dir, BLOOM_COMPACT_SUBDIR)
-    spark = df.sparkSession
+    """Start the ledger query.  Returns ``(query, packs_dir)``: one
+    packed filter per micro-batch, an OR-folded snapshot every
+    ``compact_every`` batches; the OR semilattice makes even an
+    accidental double-fold harmless (idempotent bits)."""
     g = list(group_cols)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        packed = bloom_pack(
-            bloom_bits(batch_df, value_col, g, m=m, k=k, salt=salt),
-            g,
-            m=m,
-            k=k,
-        )
-        packed.write.mode("overwrite").parquet(
-            os.path.join(packs_dir, f"batch={batch_id}")
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
-            parts = _read_parts(
-                spark, packs_dir, compact_dir, upto=batch_id - 1,
-                schema=packed.schema,
-            )
-            if parts is not None:
-                folded = bloom_merge(parts, g)
-                folded.write.mode("overwrite").parquet(
-                    os.path.join(compact_dir, f"upto={batch_id - 1}")
-                )
-                for b in _dir_ids(packs_dir, "batch"):
-                    if b <= batch_id - 1:
-                        shutil.rmtree(
-                            os.path.join(packs_dir, f"batch={b}"),
-                            ignore_errors=True,
-                        )
-                for u in _dir_ids(compact_dir, "upto"):
-                    if u < batch_id - 1:
-                        shutil.rmtree(
-                            os.path.join(compact_dir, f"upto={u}"),
-                            ignore_errors=True,
-                        )
-
-    writer = df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
+    return stream_monoid_ledger(
+        df, zone_dir, checkpoint, BLOOM_SUBDIR, BLOOM_COMPACT_SUBDIR,
+        lambda batch_df: bloom_pack(
+            bloom_bits(batch_df, value_col, g, m=m, k=k, salt=salt), g, m=m, k=k
+        ),
+        lambda parts: bloom_merge(parts, g),
+        compact_every,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), packs_dir
 
 
 def frontier_filter_seen(

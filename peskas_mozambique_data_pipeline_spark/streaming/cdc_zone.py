@@ -24,12 +24,9 @@ merge forward —
   ``max_folded_seq`` high-water mark in a ``_fold_meta`` sidecar and
   every incoming batch's min seq must exceed it, else the batch is
   rejected before landing — a late lower-seq change can no longer
-  resurrect a folded delete.  Compaction writes BEFORE deleting the
-  folded dirs,
-  and every read skips deltas ``<= snapshot id`` — a crash between
-  snapshot write and delta delete re-reads snapshot + post-snapshot
-  deltas only, and the per-key window re-resolving an already-won
-  row is a no-op.
+  resurrect a folded delete.  Snapshot and deletes follow the shared
+  ledger algebra (``streaming/ledger.py``); the per-key window
+  re-resolving an already-won row is a no-op.
 
 Scale shape: deltas are change-sized; the merge-on-read window is
 per-key (parallel across keys, never a global funnel) over snapshot +
@@ -47,14 +44,13 @@ picking a partition-dependent winner).
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from .dedup_index import _dir_ids
-from .distinct_ledger import _read_parts
+from .ledger import compact, compaction_due, dir_ids, read_parts, start_stream
 
 CDC_SUBDIR = "cdc_changes"
 CDC_COMPACT_SUBDIR = "cdc_compacted"
@@ -70,7 +66,7 @@ def max_folded_seq(spark: SparkSession, zone_dir: str) -> int | None:
     resurrect an already-folded delete, so the zone refuses it at the
     batch boundary (ADVICE r13)."""
     compact_dir = os.path.join(zone_dir, CDC_COMPACT_SUBDIR)
-    snaps = _dir_ids(compact_dir, "upto")
+    snaps = dir_ids(compact_dir, "upto")
     if not snaps:
         return None
     meta = os.path.join(compact_dir, f"upto={max(snaps)}", FOLD_META_DIR)
@@ -107,6 +103,75 @@ def _winners(
     return ranked.filter(F.col("_rn") == 1).drop("_rn")
 
 
+def check_batch_seq(
+    spark: SparkSession, zone_dir: str, batch_df: DataFrame, batch_id: int,
+    seq_col: str,
+) -> int | None:
+    """Tombstone-safety guard: compaction drops deletes on
+    the promise that seq is globally monotonic ACROSS batches — enforce
+    it here, where the promise can still be kept.  A late change with
+    seq <= the folded high-water mark could silently resurrect an
+    already-folded delete, so the batch is rejected BEFORE its delta
+    lands (the aggregate is batch-sized).  Returns that mark."""
+    folded = max_folded_seq(spark, zone_dir)
+    if folded is not None:
+        low = batch_df.agg(F.min(seq_col).alias("m")).collect()[0].m
+        if low is not None and low <= folded:
+            raise ValueError(
+                f"cdc_zone: batch {batch_id} carries seq {low} <= "
+                f"max folded seq {folded}; a compacted snapshot has "
+                "dropped tombstones up to that mark, so applying "
+                "this change could resurrect a deleted key. "
+                "Late/out-of-order feeds must re-sequence before "
+                "the zone."
+            )
+    return folded
+
+
+def compact_cdc(
+    spark: SparkSession,
+    zone_dir: str,
+    upto: int,
+    keys: Sequence[str],
+    seq_col: str,
+    op_col: str,
+    upsert_op: str,
+    delete_op: str,
+    folded: int | None,
+    schema: StructType,
+) -> None:
+    """Fold the change deltas ``<= upto`` into a winners-only snapshot
+    (tombstones dropped) with its ``_fold_meta`` high-water mark;
+    ``folded`` is the mark before this fold."""
+
+    def write_snapshot(parts: DataFrame, snap: str) -> None:
+        win = _winners(
+            parts, keys, seq_col, op_col, upsert_op, delete_op, strict=False
+        )
+        win.filter(F.col(op_col) == upsert_op).write.mode("overwrite").parquet(snap)
+        # high-water mark over EVERYTHING folded (tombstone seqs
+        # included — they out-rank every retained upsert they
+        # superseded), monotone vs the prior snapshot's mark.
+        hi = parts.agg(F.max(seq_col).alias("m")).collect()[0].m
+        if folded is not None:
+            hi = max(hi, folded) if hi is not None else folded
+        if hi is not None:
+            spark.createDataFrame(
+                [(int(hi),)], "max_folded_seq long"
+            ).coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(snap, FOLD_META_DIR)
+            )
+
+    compact(
+        spark,
+        os.path.join(zone_dir, CDC_SUBDIR),
+        os.path.join(zone_dir, CDC_COMPACT_SUBDIR),
+        upto,
+        write_snapshot,
+        schema,
+    )
+
+
 def read_cdc_state(
     spark: SparkSession,
     zone_dir: str,
@@ -119,7 +184,7 @@ def read_cdc_state(
 ) -> DataFrame | None:
     """The zone's current state: one row per live key, change payload
     columns only (``op``/``seq`` dropped)."""
-    parts = _read_parts(
+    parts = read_parts(
         spark,
         os.path.join(zone_dir, CDC_SUBDIR),
         os.path.join(zone_dir, CDC_COMPACT_SUBDIR),
@@ -139,7 +204,6 @@ def stream_cdc_zone(
     op_col: str = "op",
     upsert_op: str = "upsert",
     delete_op: str = "delete",
-    available_now: bool = True,
     compact_every: int | None = 8,
 ):
     """Start the CDC maintenance query over a STREAMING change frame.
@@ -147,75 +211,18 @@ def stream_cdc_zone(
     every ``compact_every`` batches the readable prefix folds into a
     winners-only snapshot (tombstones dropped — module docstring)."""
     cdc_dir = os.path.join(zone_dir, CDC_SUBDIR)
-    compact_dir = os.path.join(zone_dir, CDC_COMPACT_SUBDIR)
     spark = changes.sparkSession
     k = list(keys)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # Tombstone-safety guard (ADVICE r13): compaction drops deletes
-        # on the promise that seq is globally monotonic ACROSS batches —
-        # enforce it here, where the promise can still be kept.  A
-        # late change with seq <= the folded high-water mark could
-        # silently resurrect an already-folded delete, so the batch is
-        # rejected BEFORE its delta lands (the aggregate is batch-sized).
-        folded = max_folded_seq(spark, zone_dir)
-        if folded is not None:
-            low = batch_df.agg(F.min(seq_col).alias("m")).collect()[0].m
-            if low is not None and low <= folded:
-                raise ValueError(
-                    f"cdc_zone: batch {batch_id} carries seq {low} <= "
-                    f"max folded seq {folded}; a compacted snapshot has "
-                    "dropped tombstones up to that mark, so applying "
-                    "this change could resurrect a deleted key. "
-                    "Late/out-of-order feeds must re-sequence before "
-                    "the zone."
-                )
+        folded = check_batch_seq(spark, zone_dir, batch_df, batch_id, seq_col)
         batch_df.write.mode("overwrite").parquet(
             os.path.join(cdc_dir, f"batch={batch_id}")
         )
-
-        if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
-            parts = _read_parts(
-                spark, cdc_dir, compact_dir, upto=batch_id - 1,
-                schema=batch_df.schema,
+        if compaction_due(batch_id, compact_every):
+            compact_cdc(
+                spark, zone_dir, batch_id - 1, k, seq_col, op_col, upsert_op,
+                delete_op, folded, batch_df.schema,
             )
-            if parts is not None:
-                win = _winners(
-                    parts, k, seq_col, op_col, upsert_op, delete_op,
-                    strict=False,
-                )
-                snap = os.path.join(compact_dir, f"upto={batch_id - 1}")
-                win.filter(F.col(op_col) == upsert_op).write.mode(
-                    "overwrite"
-                ).parquet(snap)
-                # high-water mark over EVERYTHING folded (tombstone seqs
-                # included — they out-rank every retained upsert they
-                # superseded), monotone vs the prior snapshot's mark.
-                hi = parts.agg(F.max(seq_col).alias("m")).collect()[0].m
-                if folded is not None:
-                    hi = max(hi, folded) if hi is not None else folded
-                if hi is not None:
-                    spark.createDataFrame(
-                        [(int(hi),)], "max_folded_seq long"
-                    ).coalesce(1).write.mode("overwrite").parquet(
-                        os.path.join(snap, FOLD_META_DIR)
-                    )
-                for b in _dir_ids(cdc_dir, "batch"):
-                    if b <= batch_id - 1:
-                        shutil.rmtree(
-                            os.path.join(cdc_dir, f"batch={b}"),
-                            ignore_errors=True,
-                        )
-                for u in _dir_ids(compact_dir, "upto"):
-                    if u < batch_id - 1:
-                        shutil.rmtree(
-                            os.path.join(compact_dir, f"upto={u}"),
-                            ignore_errors=True,
-                        )
 
-    writer = changes.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), cdc_dir
+    return start_stream(changes, handle, checkpoint), cdc_dir

@@ -40,11 +40,12 @@ Index layout (what actually bounds the per-batch read):
   is a pure rewrite — no upsert key resolution needed, unlike
   ``operators/merge.py``.
 
-Compaction is crash-safe by the same idempotency argument as the delta
-writes: the snapshot is keyed ``upto=<batch_id>`` and written before
-any deletion; a replayed batch finds its own snapshot already in
-place, reads it (its own rows join-filter out via ``id_n != id_x`` and
-the pair dedup), and rewrites byte-identical outputs.
+Compaction is crash-safe by the shared ledger algebra
+(``streaming/ledger.py``): the snapshot is keyed ``upto=<batch_id>``
+and written before any deletion; a replayed batch finds its own
+snapshot already in place, reads it (its own rows join-filter out via
+``id_n != id_x`` and the pair dedup), rewrites byte-identical outputs
+and only prunes.
 
 State lives in the zone, not the state store — the streaming query
 itself is stateless, so there is no watermark bound on how far back a
@@ -55,12 +56,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as dedup_ops
+from .ledger import dir_ids, prune, start_stream
 
 INDEX_SUBDIR = "minhash_index"
 COMPACT_SUBDIR = "minhash_index_compacted"
@@ -138,21 +139,6 @@ def _verified_pairs(
     ).filter(F.col("jaccard") >= threshold)
 
 
-def _dir_ids(root: str, key: str) -> list[int]:
-    """Numeric ids of ``<key>=<n>`` subdirectories of ``root`` (empty
-    when the root does not exist yet)."""
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for name in os.listdir(root):
-        if name.startswith(f"{key}="):
-            try:
-                out.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
 def read_index_parts(
     spark: SparkSession, index_dir: str, compact_dir: str
 ) -> tuple[DataFrame | None, DataFrame | None]:
@@ -169,7 +155,7 @@ def read_index_parts(
     micro-batch.  Deltas are bounded (≤ compact_every − 1 batches) and
     cheap to shuffle.
     """
-    snaps = _dir_ids(compact_dir, "upto")
+    snaps = dir_ids(compact_dir, "upto")
     upto = snaps[-1] if snaps else -1
     snapshot = None
     if upto >= 0:
@@ -182,7 +168,7 @@ def read_index_parts(
             # metadata — correct, just unbucketed (read_latest_bucketed
             # fallback posture)
             snapshot = spark.read.parquet(os.path.join(compact_dir, f"upto={upto}"))
-    delta_ids = [b for b in _dir_ids(index_dir, "batch") if b > upto]
+    delta_ids = [b for b in dir_ids(index_dir, "batch") if b > upto]
     deltas = None
     if delta_ids:
         deltas = (
@@ -210,7 +196,6 @@ def read_index(
     return snapshot.unionByName(deltas.select(*snapshot.columns))
 
 
-
 def compact_index_zone(
     spark: SparkSession,
     index_dir: str,
@@ -219,9 +204,9 @@ def compact_index_zone(
     snapshot_buckets: int = SNAPSHOT_BUCKETS,
 ) -> None:
     """Fold snapshot + all deltas ≤ ``batch_id`` (including the one
-    just written) into a new snapshot, THEN drop what it supersedes.
-    Keyed overwrite makes a crash-replay rewrite the same snapshot
-    rather than duplicate rows.  The snapshot is an EXTERNAL table
+    just written) into a new snapshot, THEN drop what it supersedes
+    (``ledger.prune``).  A crash-replay finds the snapshot already
+    written and only prunes.  The snapshot is an EXTERNAL table
     hash-bucketed (and bucket-sorted) on the (band, bucket) join key:
     one shuffle here, at compaction, buys an exchange-free corpus side
     on every subsequent micro-batch join
@@ -233,29 +218,21 @@ def compact_index_zone(
     shares this lifecycle verbatim (the catalog name's ``minhash_``
     prefix is legacy-shared; uniqueness comes from the zone-path md5).
     """
-    full = read_index(spark, index_dir, compact_dir)
-    table = _snapshot_table(compact_dir, batch_id)
-    (
-        full.write.mode("overwrite")
-        .bucketBy(snapshot_buckets, "band", "bucket")
-        .sortBy("band", "bucket")
-        .format("parquet")
-        .option("path", os.path.join(compact_dir, f"upto={batch_id}"))
-        .saveAsTable(table)
-    )
-    for b in _dir_ids(index_dir, "batch"):
-        if b <= batch_id:
-            shutil.rmtree(
-                os.path.join(index_dir, f"batch={b}"), ignore_errors=True
-            )
-    for u in _dir_ids(compact_dir, "upto"):
+    path = os.path.join(compact_dir, f"upto={batch_id}")
+    if not os.path.isdir(path):  # a replay finds it written: only prune
+        full = read_index(spark, index_dir, compact_dir)
+        (
+            full.write.mode("overwrite")
+            .bucketBy(snapshot_buckets, "band", "bucket")
+            .sortBy("band", "bucket")
+            .format("parquet")
+            .option("path", path)
+            .saveAsTable(_snapshot_table(compact_dir, batch_id))
+        )
+    for u in dir_ids(compact_dir, "upto"):
         if u < batch_id:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {_snapshot_table(compact_dir, u)}"
-            )
-            shutil.rmtree(
-                os.path.join(compact_dir, f"upto={u}"), ignore_errors=True
-            )
+            spark.sql(f"DROP TABLE IF EXISTS {_snapshot_table(compact_dir, u)}")
+    prune(index_dir, compact_dir, batch_id)
 
 
 def stream_near_dup_index(
@@ -268,7 +245,6 @@ def stream_near_dup_index(
     n_hashes: int = 8,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    available_now: bool = True,
     compact_every: int | None = 8,
     snapshot_buckets: int = SNAPSHOT_BUCKETS,
 ):
@@ -321,12 +297,7 @@ def stream_near_dup_index(
                 spark, index_dir, compact_dir, batch_id, snapshot_buckets
             )
 
-    writer = df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), index_dir, pairs_dir
+    return start_stream(df, handle, checkpoint), index_dir, pairs_dir
 
 
 def read_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:

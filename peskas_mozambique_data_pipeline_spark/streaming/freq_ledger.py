@@ -6,16 +6,12 @@ corpus to d·w cell counts per group.  Cell counts are a SUM MONOID —
 adding per-batch cell deltas per (group, i, cell) equals the sketch of
 the unioned inputs EXACTLY — so, like the release ledger
 (``release_ledger.py``) and unlike the MAX-semilattice HLL ledger,
-correctness rests on never counting a batch twice:
+correctness rests on never counting a batch twice — the shared ledger
+bookkeeping (``streaming/ledger.py``):
 
-* ``cms_cells/batch=<id>`` — this micro-batch's cell delta, derived
-  from the batch alone, so a REPLAYED batch recomputes the identical
-  delta and overwrites its own dir (keyed-overwrite idempotency);
+* ``cms_cells/batch=<id>`` — this micro-batch's cell delta;
 * ``cms_cells_compacted/upto=<id>`` — SUM-folded snapshot of batches
-  ≤ id.  Reads always skip deltas ≤ the newest snapshot id, and the
-  fold writes before it deletes — a crash between fold and delete
-  re-reads snapshot + surviving deltas > snapshot and folds to the
-  same cells (never a double count, the ``release_ledger`` argument);
+  ≤ id;
 * ``hh_cands/batch=<id>`` — the batch's top-``t`` values by exact
   in-batch count (ties broken by value — deterministic), the
   candidate half of the classic CMS heavy-hitter scheme.
@@ -41,19 +37,27 @@ restarts, and its stream ≡ batch cell parity is BIT-exact
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketches import cms_lookup, cms_sketch
-from .dedup_index import _dir_ids
-from .distinct_ledger import _read_parts
+from .ledger import (
+    compact,
+    compaction_due,
+    dir_ids,
+    read_monoid_ledger,
+    start_stream,
+)
 
 CELLS_SUBDIR = "cms_cells"
 CELLS_COMPACT_SUBDIR = "cms_cells_compacted"
 CANDS_SUBDIR = "hh_cands"
+
+
+def _fold(parts: DataFrame, group_cols: Sequence[str]) -> DataFrame:
+    return parts.groupBy(*group_cols, "i", "cell").agg(F.sum("n").alias("n"))
 
 
 def read_cells(
@@ -62,15 +66,9 @@ def read_cells(
     """The ledger's current cell table — SUM-folded over snapshot +
     deltas, identical to ``cms_sketch`` over everything the stream has
     carried (the monoid parity pytest pins)."""
-    parts = _read_parts(
-        spark,
-        os.path.join(zone_dir, CELLS_SUBDIR),
-        os.path.join(zone_dir, CELLS_COMPACT_SUBDIR),
-    )
-    if parts is None:
-        return None
-    return parts.groupBy(*group_cols, "i", "cell").agg(
-        F.sum("n").alias("n")
+    return read_monoid_ledger(
+        spark, zone_dir, CELLS_SUBDIR, CELLS_COMPACT_SUBDIR,
+        lambda parts: _fold(parts, group_cols),
     )
 
 
@@ -115,7 +113,7 @@ def heavy_hitters(
     from pyspark.sql import Window
 
     cands_dir = os.path.join(zone_dir, CANDS_SUBDIR)
-    ids = _dir_ids(cands_dir, "batch")
+    ids = dir_ids(cands_dir, "batch")
     if not ids:
         return None
     cands = spark.read.parquet(
@@ -147,17 +145,14 @@ def stream_freq_ledger(
     depth: int = 4,
     salt: str = "cms",
     cand_t: int = 16,
-    available_now: bool = True,
     compact_every: int | None = 8,
 ):
     """Start the ledger query.  Returns ``(query, cells_dir)``.
 
-    Each micro-batch writes its own cell delta under ``batch=<id>``
-    and its top-``cand_t`` exact in-batch values under the candidate
-    log; every ``compact_every`` batches the deltas ≤ current − 1
-    SUM-fold into an ``upto=<id>`` snapshot and the superseded dirs
-    are deleted — write-before-delete + skip-≤-snapshot reads, so the
-    fold can never double-count.
+    Each micro-batch writes its cell delta and its top-``cand_t``
+    exact in-batch values under the candidate log; every
+    ``compact_every`` batches the cell deltas SUM-fold into a snapshot
+    (``streaming/ledger.py``).
     """
     from pyspark.sql import Window
 
@@ -166,6 +161,9 @@ def stream_freq_ledger(
     cands_dir = os.path.join(zone_dir, CANDS_SUBDIR)
     spark = df.sparkSession
     g = list(group_cols)
+
+    def write_snapshot(parts: DataFrame, path: str) -> None:
+        _fold(parts, g).write.mode("overwrite").parquet(path)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         cells = cms_sketch(
@@ -192,34 +190,10 @@ def stream_freq_ledger(
             os.path.join(cands_dir, f"batch={batch_id}")
         )
 
-        if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
-            parts = _read_parts(
-                spark, cells_dir, compact_dir, upto=batch_id - 1,
-                schema=cells.schema,
+        if compaction_due(batch_id, compact_every):
+            compact(
+                spark, cells_dir, compact_dir, batch_id - 1, write_snapshot,
+                cells.schema,
             )
-            if parts is not None:
-                folded = parts.groupBy(*g, "i", "cell").agg(
-                    F.sum("n").alias("n")
-                )
-                folded.write.mode("overwrite").parquet(
-                    os.path.join(compact_dir, f"upto={batch_id - 1}")
-                )
-                for b in _dir_ids(cells_dir, "batch"):
-                    if b <= batch_id - 1:
-                        shutil.rmtree(
-                            os.path.join(cells_dir, f"batch={b}"),
-                            ignore_errors=True,
-                        )
-                for u in _dir_ids(compact_dir, "upto"):
-                    if u < batch_id - 1:
-                        shutil.rmtree(
-                            os.path.join(compact_dir, f"upto={u}"),
-                            ignore_errors=True,
-                        )
 
-    writer = df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), cells_dir
+    return start_stream(df, handle, checkpoint), cells_dir

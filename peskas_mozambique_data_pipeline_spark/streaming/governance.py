@@ -27,12 +27,11 @@ re-readable by any engine.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .dedup_index import _dir_ids
+from .ledger import compact, compaction_due, dir_ids, read_parts, start_stream
 
 KEPT_SUBDIR = "cap_kept"
 COUNTS_SUBDIR = "cap_counts"
@@ -46,34 +45,14 @@ def _prior_counts(
     group_col: str,
     before_batch: int,
 ) -> DataFrame | None:
-    """Accumulated accepted counts over batches < ``before_batch``:
-    the newest eligible snapshot (``upto=<id>`` folds batches ≤ id)
-    plus the delta dirs after it.  Bounded read — at most one snapshot
-    and ``compact_every`` deltas exist at any time (the same fold
-    pattern as ``dedup_index.read_index``; without it each micro-batch
-    re-lists O(#batches) dirs).  A snapshot is eligible only when its
-    ``upto`` is strictly before ``before_batch``, so a replayed batch
-    never reads state that includes itself — compaction guarantees
-    such a snapshot exists by only folding batches ≤ current − 1.
-    Returns None when no prior batch exists."""
-    snaps = [s for s in _dir_ids(compact_dir, "upto") if s < before_batch]
-    upto = snaps[-1] if snaps else -1
-    ids = [b for b in _dir_ids(counts_dir, "batch") if upto < b < before_batch]
-    frames = []
-    if upto >= 0:
-        frames.append(spark.read.parquet(os.path.join(compact_dir, f"upto={upto}")))
-    if ids:
-        frames.append(
-            spark.read.option("basePath", counts_dir)
-            .parquet(*[os.path.join(counts_dir, f"batch={b}") for b in ids])
-            .select(group_col, "n_accepted")
-        )
-    if not frames:
+    """Accumulated accepted counts over batches < ``before_batch``
+    (``None`` when no prior batch exists): the newest snapshot
+    strictly before ``before_batch`` plus the deltas after it.  A
+    replayed batch never reads state that includes itself."""
+    parts = read_parts(spark, counts_dir, compact_dir, upto=before_batch - 1)
+    if parts is None:
         return None
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.groupBy(group_col).agg(F.sum("n_accepted").alias("_prior"))
+    return parts.groupBy(group_col).agg(F.sum("n_accepted").alias("_prior"))
 
 
 def stream_source_cap(
@@ -84,7 +63,6 @@ def stream_source_cap(
     cap: int = 100,
     id_col: str = "doc_id",
     salt: str = "cap",
-    available_now: bool = True,
     compact_every: int | None = 8,
 ):
     """Start the incremental cap query.  Returns
@@ -96,17 +74,22 @@ def stream_source_cap(
     counts under ``batch=<id>`` — idempotent keyed overwrites.
 
     Every ``compact_every`` batches the count deltas fold into one
-    ``upto=<id>`` snapshot (group-cardinality-sized) and the folded
-    delta dirs are deleted, so the per-batch state read stays bounded
-    as the stream ages.  The fold covers batches ≤ current − 1 only:
-    a snapshot must never include the batch that wrote it, or a
-    crash-replay of that batch would read its own output as "prior"
-    and cap itself out.  ``compact_every=None`` disables compaction.
+    group-cardinality-sized snapshot (``streaming/ledger.py``), so the
+    per-batch state read stays bounded as the stream ages.  The fold
+    covers batches ≤ current − 1 only: a snapshot must never include
+    the batch that wrote it, or a crash-replay of that batch would
+    read its own output as "prior" and cap itself out.
+    ``compact_every=None`` disables compaction.
     """
     kept_dir = os.path.join(zone_dir, KEPT_SUBDIR)
     counts_dir = os.path.join(zone_dir, COUNTS_SUBDIR)
     counts_compact_dir = os.path.join(zone_dir, COUNTS_COMPACT_SUBDIR)
     spark = df.sparkSession
+
+    def write_snapshot(parts: DataFrame, path: str) -> None:
+        parts.groupBy(group_col).agg(
+            F.sum("n_accepted").alias("n_accepted")
+        ).write.mode("overwrite").parquet(path)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         prior = _prior_counts(
@@ -132,52 +115,24 @@ def stream_source_cap(
         kept.write.mode("overwrite").parquet(
             os.path.join(kept_dir, f"batch={batch_id}")
         )
-        kept.groupBy(group_col).agg(
+        counts = kept.groupBy(group_col).agg(
             F.count(F.lit(1)).alias("n_accepted")
-        ).write.mode("overwrite").parquet(
+        )
+        counts.write.mode("overwrite").parquet(
             os.path.join(counts_dir, f"batch={batch_id}")
         )
-
-        if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
-            # Fold batches ≤ batch_id − 1 (NOT the delta just written —
-            # see the docstring's replay argument) into a keyed
-            # snapshot, THEN delete what it supersedes.  Write-before-
-            # delete + keyed overwrite = crash-safe, same as
-            # dedup_index: a replay re-reads the newest snapshot plus
-            # surviving deltas and rewrites the identical snapshot.
-            folded = _prior_counts(
-                spark, counts_dir, counts_compact_dir, group_col, batch_id
+        if compaction_due(batch_id, compact_every):
+            compact(
+                spark, counts_dir, counts_compact_dir, batch_id - 1,
+                write_snapshot, counts.schema,
             )
-            if folded is not None:
-                folded.select(
-                    group_col, F.col("_prior").alias("n_accepted")
-                ).write.mode("overwrite").parquet(
-                    os.path.join(counts_compact_dir, f"upto={batch_id - 1}")
-                )
-                for b in _dir_ids(counts_dir, "batch"):
-                    if b <= batch_id - 1:
-                        shutil.rmtree(
-                            os.path.join(counts_dir, f"batch={b}"),
-                            ignore_errors=True,
-                        )
-                for u in _dir_ids(counts_compact_dir, "upto"):
-                    if u < batch_id - 1:
-                        shutil.rmtree(
-                            os.path.join(counts_compact_dir, f"upto={u}"),
-                            ignore_errors=True,
-                        )
 
-    writer = df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), kept_dir, counts_dir
+    return start_stream(df, handle, checkpoint), kept_dir, counts_dir
 
 
 def read_kept(spark: SparkSession, kept_dir: str) -> DataFrame | None:
     """All accepted rows across batches (None before the first)."""
-    ids = _dir_ids(kept_dir, "batch")
+    ids = dir_ids(kept_dir, "batch")
     if not ids:
         return None
     return spark.read.option("basePath", kept_dir).parquet(

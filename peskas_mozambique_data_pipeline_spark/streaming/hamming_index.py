@@ -39,6 +39,7 @@ from .dedup_index import (
     compact_index_zone,
     read_index_parts,
 )
+from .ledger import start_stream
 
 INDEX_SUBDIR = "hamming_index"
 COMPACT_SUBDIR = "hamming_index_compacted"
@@ -112,7 +113,6 @@ def stream_hamming_index(
     hash_col: str = "dhash",
     max_hamming: int = 4,
     n_bands: int | None = None,
-    available_now: bool = True,
     compact_every: int | None = 8,
     snapshot_buckets: int = SNAPSHOT_BUCKETS,
 ):
@@ -162,12 +162,7 @@ def stream_hamming_index(
                 spark, index_dir, compact_dir, batch_id, snapshot_buckets
             )
 
-    writer = df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), index_dir, pairs_dir
+    return start_stream(df, handle, checkpoint), index_dir, pairs_dir
 
 
 def probe_hamming_index(

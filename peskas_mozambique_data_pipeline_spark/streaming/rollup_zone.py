@@ -20,10 +20,9 @@ the CHANGE's effect into the aggregate:
 * :func:`read_rollup` sum-folds snapshot + deltas (a pure sum monoid:
   associative, commutative, restart-safe) and drops groups whose
   ``n_rows`` reached zero;
-* compaction folds deltas ``<= id`` into a ``upto=<id>`` snapshot,
-  writes BEFORE deleting the folded dirs (the release-ledger crash
-  points), and drops zeroed groups — exact because of the type rule
-  below.
+* compaction folds deltas ``<= id`` into a ``upto=<id>`` snapshot
+  (the shared ledger algebra, ``streaming/ledger.py``) and drops
+  zeroed groups — exact because of the type rule below.
 
 Determinism / exactness contract: measure columns must be integral
 (or decimal) — a retraction fold over IEEE doubles drifts (x + y − y
@@ -55,7 +54,6 @@ view-maintenance delta rules (counting algorithm).
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,12 +63,11 @@ from pyspark.sql import types as T
 from .cdc_zone import (
     CDC_COMPACT_SUBDIR,
     CDC_SUBDIR,
-    FOLD_META_DIR,
     _winners,
-    max_folded_seq,
+    check_batch_seq,
+    compact_cdc,
 )
-from .dedup_index import _dir_ids
-from .distinct_ledger import _read_parts
+from .ledger import compact, compaction_due, read_parts, start_stream
 
 ROLLUP_SUBDIR = "rollup_deltas"
 ROLLUP_COMPACT_SUBDIR = "rollup_compacted"
@@ -123,7 +120,7 @@ def read_rollup(
     """Current grouped rollup: sum-fold of snapshot + delta dirs,
     zero-count groups dropped (a fully-retracted group reads the same
     as one never seen)."""
-    parts = _read_parts(
+    parts = read_parts(
         spark,
         os.path.join(zone_dir, ROLLUP_SUBDIR),
         os.path.join(zone_dir, ROLLUP_COMPACT_SUBDIR),
@@ -139,37 +136,30 @@ def read_rollup(
 
 
 def compact_rollup(spark: SparkSession, zone_dir: str, upto: int) -> None:
-    """Fold rollup deltas ``<= upto`` into a winners snapshot (zeroed
-    groups dropped — exact under the integral-measure contract),
-    write-before-delete."""
-    roll_dir = os.path.join(zone_dir, ROLLUP_SUBDIR)
-    compact_dir = os.path.join(zone_dir, ROLLUP_COMPACT_SUBDIR)
-    parts = _read_parts(spark, roll_dir, compact_dir, upto=upto)
-    if parts is None:
-        return
-    g = [c for c in parts.columns if c != "n_rows" and not c.startswith("sum_")]
-    sums = [c for c in parts.columns if c.startswith("sum_")]
-    folded = (
-        parts.groupBy(*g)
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            *[F.sum(c).alias(c) for c in sums],
+    """Fold rollup deltas ``<= upto`` into a snapshot (zeroed groups
+    dropped — exact under the integral-measure contract)."""
+
+    def write_snapshot(parts: DataFrame, path: str) -> None:
+        g = [c for c in parts.columns if c != "n_rows" and not c.startswith("sum_")]
+        sums = [c for c in parts.columns if c.startswith("sum_")]
+        (
+            parts.groupBy(*g)
+            .agg(
+                F.sum("n_rows").alias("n_rows"),
+                *[F.sum(c).alias(c) for c in sums],
+            )
+            .filter(F.col("n_rows") != 0)
+            .write.mode("overwrite")
+            .parquet(path)
         )
-        .filter(F.col("n_rows") != 0)
+
+    compact(
+        spark,
+        os.path.join(zone_dir, ROLLUP_SUBDIR),
+        os.path.join(zone_dir, ROLLUP_COMPACT_SUBDIR),
+        upto,
+        write_snapshot,
     )
-    folded.write.mode("overwrite").parquet(
-        os.path.join(compact_dir, f"upto={upto}")
-    )
-    for b in _dir_ids(roll_dir, "batch"):
-        if b <= upto:
-            shutil.rmtree(
-                os.path.join(roll_dir, f"batch={b}"), ignore_errors=True
-            )
-    for u in _dir_ids(compact_dir, "upto"):
-        if u < upto:
-            shutil.rmtree(
-                os.path.join(compact_dir, f"upto={u}"), ignore_errors=True
-            )
 
 
 def stream_rollup_zone(
@@ -183,7 +173,6 @@ def stream_rollup_zone(
     op_col: str = "op",
     upsert_op: str = "upsert",
     delete_op: str = "delete",
-    available_now: bool = True,
     compact_every: int | None = 8,
 ):
     """Maintain a CDC zone AND its incrementally-folded grouped rollup
@@ -195,27 +184,18 @@ def stream_rollup_zone(
     the raw changes land under ``cdc_changes/batch=<id>`` (this order
     makes the state read correct on replay; both writes are
     idempotent overwrites).  Every ``compact_every`` batches both the
-    CDC prefix and the rollup prefix fold, each with its own
-    write-before-delete snapshot."""
+    CDC prefix (``cdc_zone.compact_cdc``) and the rollup prefix fold,
+    each into its own snapshot."""
     _check_measures(changes, sum_cols)
     cdc_dir = os.path.join(zone_dir, CDC_SUBDIR)
-    compact_cdc = os.path.join(zone_dir, CDC_COMPACT_SUBDIR)
+    cdc_compact_dir = os.path.join(zone_dir, CDC_COMPACT_SUBDIR)
     roll_dir = os.path.join(zone_dir, ROLLUP_SUBDIR)
     spark = changes.sparkSession
     k = list(keys)
     g = list(group_cols)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        folded = max_folded_seq(spark, zone_dir)
-        if folded is not None:
-            low = batch_df.agg(F.min(seq_col).alias("m")).collect()[0].m
-            if low is not None and low <= folded:
-                raise ValueError(
-                    f"rollup_zone: batch {batch_id} carries seq {low} <= "
-                    f"max folded seq {folded}; re-sequence late feeds "
-                    "before the zone (tombstones are dropped at "
-                    "compaction)"
-                )
+        folded = check_batch_seq(spark, zone_dir, batch_df, batch_id, seq_col)
 
         winners = _winners(
             batch_df, k, seq_col, op_col, upsert_op, delete_op, strict=True
@@ -225,8 +205,8 @@ def stream_rollup_zone(
         ]
         new = winners.filter(F.col(op_col) == upsert_op).select(*payload)
 
-        state = _read_parts(
-            spark, cdc_dir, compact_cdc, upto=batch_id - 1,
+        state = read_parts(
+            spark, cdc_dir, cdc_compact_dir, upto=batch_id - 1,
             schema=batch_df.schema,
         )
         if state is None:
@@ -249,46 +229,11 @@ def stream_rollup_zone(
             os.path.join(cdc_dir, f"batch={batch_id}")
         )
 
-        if compact_every and (batch_id + 1) % compact_every == 0 and batch_id > 0:
-            upto = batch_id - 1
-            parts = _read_parts(
-                spark, cdc_dir, compact_cdc, upto=upto, schema=batch_df.schema
+        if compaction_due(batch_id, compact_every):
+            compact_cdc(
+                spark, zone_dir, batch_id - 1, k, seq_col, op_col, upsert_op,
+                delete_op, folded, batch_df.schema,
             )
-            if parts is not None:
-                win = _winners(
-                    parts, k, seq_col, op_col, upsert_op, delete_op,
-                    strict=False,
-                )
-                snap = os.path.join(compact_cdc, f"upto={upto}")
-                win.filter(F.col(op_col) == upsert_op).write.mode(
-                    "overwrite"
-                ).parquet(snap)
-                hi = parts.agg(F.max(seq_col).alias("m")).collect()[0].m
-                if folded is not None:
-                    hi = max(hi, folded) if hi is not None else folded
-                if hi is not None:
-                    spark.createDataFrame(
-                        [(int(hi),)], "max_folded_seq long"
-                    ).coalesce(1).write.mode("overwrite").parquet(
-                        os.path.join(snap, FOLD_META_DIR)
-                    )
-                for b in _dir_ids(cdc_dir, "batch"):
-                    if b <= upto:
-                        shutil.rmtree(
-                            os.path.join(cdc_dir, f"batch={b}"),
-                            ignore_errors=True,
-                        )
-                for u in _dir_ids(compact_cdc, "upto"):
-                    if u < upto:
-                        shutil.rmtree(
-                            os.path.join(compact_cdc, f"upto={u}"),
-                            ignore_errors=True,
-                        )
-            compact_rollup(spark, zone_dir, upto)
+            compact_rollup(spark, zone_dir, batch_id - 1)
 
-    writer = changes.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), zone_dir
+    return start_stream(changes, handle, checkpoint), zone_dir

@@ -4,6 +4,7 @@ from pyspark.sql import functions as F
 
 from peskas_mozambique_data_pipeline_spark.streaming import dedup_index as di
 from peskas_mozambique_data_pipeline_spark.streaming import ingest as si
+from peskas_mozambique_data_pipeline_spark.streaming import ledger
 import pytest
 
 DOC = "the quick brown fox jumps over the lazy dog near the river bank today"
@@ -112,6 +113,57 @@ def test_compaction_bounds_the_index(spark, tmp_path):
         for r in di.read_pairs(spark, pairs_dir).collect()
     }
     assert (1, 3) in got and got.get((4, 5)) == 1.0
+
+
+@pytest.mark.slow
+def test_crash_between_snapshot_and_prune_replays_exactly(
+    spark, tmp_path, monkeypatch
+):
+    """Crash the compaction after the bucketed snapshot is written and
+    before anything is deleted, then restart from the same checkpoint:
+    the replayed batch keeps the snapshot it finds (rewriting it would
+    overwrite the table it reads) and lands the uncrashed pairs and
+    layout."""
+    landing = str(tmp_path / "landing")
+    schema = _write(spark, landing, [(1, DOC), (2, OTHER)])
+    _write(spark, landing, [(3, DOC_NEAR), (4, THIRD), (5, THIRD)])
+
+    def run(name):
+        stream = si.stream_landing_zone(
+            spark, landing, schema, max_files_per_trigger=1
+        )
+        q, index_dir, pairs_dir = di.stream_near_dup_index(
+            stream, str(tmp_path / name), str(tmp_path / f"ck_{name}"),
+            jaccard_threshold=0.5, compact_every=2,
+        )
+        q.awaitTermination(180)
+        return index_dir, pairs_dir
+
+    _, ref_pairs = run("ref")
+    want = sorted(map(tuple, di.read_pairs(spark, ref_pairs).collect()))
+
+    real_prune = di.prune
+    calls = []
+
+    def crash_once(*args):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("injected crash between snapshot and prune")
+        real_prune(*args)
+
+    monkeypatch.setattr(di, "prune", crash_once)
+    with pytest.raises(Exception):
+        run("zone")
+    index_dir = str(tmp_path / "zone" / di.INDEX_SUBDIR)
+    compact_dir = str(tmp_path / "zone" / di.COMPACT_SUBDIR)
+    assert ledger.dir_ids(compact_dir, "upto") == [1]
+    assert ledger.dir_ids(index_dir, "batch") == [0, 1]
+
+    _, pairs_dir = run("zone")
+    assert sorted(map(tuple, di.read_pairs(spark, pairs_dir).collect())) == want
+    assert ledger.dir_ids(compact_dir, "upto") == [1]
+    assert ledger.dir_ids(index_dir, "batch") == []
+    assert spark.catalog.tableExists(di._snapshot_table(compact_dir, 1))
 
 
 def test_streaming_pairs_match_batch_pipeline(spark, tmp_path):

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from peskas_mozambique_data_pipeline_spark.operators import sketches as sk
 from peskas_mozambique_data_pipeline_spark.streaming import distinct_ledger as dl
 from peskas_mozambique_data_pipeline_spark.streaming import ingest as si
+from peskas_mozambique_data_pipeline_spark.streaming import ledger
 import pytest
 
 
@@ -82,10 +83,10 @@ def test_compaction_preserves_registers_and_bounds_dirs(spark, tmp_path):
     q.awaitTermination(120)
 
     compact_dir = os.path.join(zone, dl.REG_COMPACT_SUBDIR)
-    assert dl._dir_ids(compact_dir, "upto")  # a snapshot landed
+    assert ledger.dir_ids(compact_dir, "upto")  # a snapshot landed
     # folded deltas are gone; the live view still equals batch
-    live_deltas = dl._dir_ids(reg_dir, "batch")
-    assert all(b > max(dl._dir_ids(compact_dir, "upto")) for b in live_deltas)
+    live_deltas = ledger.dir_ids(reg_dir, "batch")
+    assert all(b > max(ledger.dir_ids(compact_dir, "upto")) for b in live_deltas)
     got = {
         (r.source, r.j): r.r
         for r in dl.read_registers(spark, zone, ["source"]).collect()

@@ -1,7 +1,8 @@
-"""The compacting ledgers' shared part read (``distinct_ledger._read_parts``):
-the newest snapshot and the deltas after it are read as ONE multi-path
+"""The compacting ledgers' shared algebra (``streaming/ledger.py``): the
+newest snapshot and the deltas after it are read as ONE multi-path
 parquet scan, which is exact only if every ledger's snapshot keeps its
-delta's schema and deltas the snapshot covers are never read again."""
+delta's schema and deltas the snapshot covers are never read again; and
+a crash between the snapshot write and the delete replays exactly."""
 
 from __future__ import annotations
 
@@ -18,12 +19,14 @@ from peskas_mozambique_data_pipeline_spark.streaming import (
     distinct_ledger,
     dq_ledger,
     freq_ledger,
+    governance,
     ingest,
+    ledger,
     quantile_ledger,
     release_ledger,
     rollup_zone,
 )
-from peskas_mozambique_data_pipeline_spark.streaming.distinct_ledger import _read_parts
+from peskas_mozambique_data_pipeline_spark.streaming.ledger import read_parts
 
 SCHEMA = "k long, seq long, op string, grp string, cents long"
 
@@ -44,9 +47,10 @@ def _land(spark, landing, n_files=3, rows_per_file=40):
     return schema
 
 
-def _start(kind, stream, zone, ck):
+def _query(kind, stream, zone, ck):
     """Start one ledger over ``stream`` with a snapshot every 2 batches;
-    returns the (delta dir, snapshot dir) pairs it maintains."""
+    returns the query and the (delta dir, snapshot dir) pairs it
+    maintains."""
     g = ["grp"]
     if kind == "distinct":
         q, _ = distinct_ledger.stream_distinct_ledger(
@@ -79,6 +83,11 @@ def _start(kind, stream, zone, ck):
             stream, zone, ck, "k", g, compact_every=2
         )
         subs = [(bloom_ledger.BLOOM_SUBDIR, bloom_ledger.BLOOM_COMPACT_SUBDIR)]
+    elif kind == "cap":
+        q, _, _ = governance.stream_source_cap(
+            stream, zone, ck, "grp", id_col="k", compact_every=2
+        )
+        subs = [(governance.COUNTS_SUBDIR, governance.COUNTS_COMPACT_SUBDIR)]
     elif kind == "cdc":
         q, _ = cdc_zone.stream_cdc_zone(stream, zone, ck, ["k"], compact_every=2)
         subs = [(cdc_zone.CDC_SUBDIR, cdc_zone.CDC_COMPACT_SUBDIR)]
@@ -90,9 +99,16 @@ def _start(kind, stream, zone, ck):
             (cdc_zone.CDC_SUBDIR, cdc_zone.CDC_COMPACT_SUBDIR),
             (rollup_zone.ROLLUP_SUBDIR, rollup_zone.ROLLUP_COMPACT_SUBDIR),
         ]
+    return q, [(os.path.join(zone, d), os.path.join(zone, c)) for d, c in subs]
+
+
+def _start(kind, stream, zone, ck):
+    """Run one ledger to completion; returns its (delta dir, snapshot
+    dir) pairs."""
+    q, subs = _query(kind, stream, zone, ck)
     q.awaitTermination(120)
     assert q.exception() is None
-    return [(os.path.join(zone, d), os.path.join(zone, c)) for d, c in subs]
+    return subs
 
 
 def _types(spark, path):
@@ -101,7 +117,7 @@ def _types(spark, path):
 
 @pytest.mark.parametrize(
     "kind",
-    ["distinct", "dq", "release", "freq", "quantile", "bloom", "cdc", "rollup"],
+    ["distinct", "dq", "release", "freq", "quantile", "bloom", "cap", "cdc", "rollup"],
 )
 def test_snapshot_and_delta_schemas_agree(spark, tmp_path, kind):
     landing = str(tmp_path / "landing")
@@ -114,8 +130,8 @@ def test_snapshot_and_delta_schemas_agree(spark, tmp_path, kind):
     ):
         # batches 0..2 with a snapshot after batch 1: upto=0 plus
         # deltas 1 and 2
-        assert distinct_ledger._dir_ids(compact_dir, "upto") == [0]
-        assert distinct_ledger._dir_ids(delta_dir, "batch") == [1, 2]
+        assert ledger.dir_ids(compact_dir, "upto") == [0]
+        assert ledger.dir_ids(delta_dir, "batch") == [1, 2]
         snap = _types(spark, os.path.join(compact_dir, "upto=0"))
         for b in (1, 2):
             assert _types(spark, os.path.join(delta_dir, f"batch={b}")) == snap
@@ -141,16 +157,16 @@ def test_replayed_batch_after_snapshot_counts_once(spark, tmp_path):
     )
     q.awaitTermination(120)
     compact_dir = os.path.join(zone, release_ledger.FOLD_COMPACT_SUBDIR)
-    assert distinct_ledger._dir_ids(compact_dir, "upto") == [0]
+    assert ledger.dir_ids(compact_dir, "upto") == [0]
 
     # replay batch 0 after upto=0 landed: its delta dir is back
     first = spark.createDataFrame(rows[0:30], "doc_id long, source string")
     release_ledger._delta(first, ["source"]).write.mode("overwrite").parquet(
         os.path.join(fold_dir, "batch=0")
     )
-    assert distinct_ledger._dir_ids(fold_dir, "batch") == [0, 1, 2]
+    assert ledger.dir_ids(fold_dir, "batch") == [0, 1, 2]
 
-    parts = _read_parts(spark, fold_dir, compact_dir)
+    parts = read_parts(spark, fold_dir, compact_dir)
     plan = parts._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == 1
     assert sum(r.n_rows for r in parts.collect()) == len(rows)
@@ -164,3 +180,84 @@ def test_replayed_batch_after_snapshot_counts_once(spark, tmp_path):
         for r in parquet_io.release_fold(spark.read.parquet(landing), ["source"]).collect()
     }
     assert got == want
+
+
+def _read(kind, spark, zone):
+    """The ledger's public read, as sorted rows."""
+    g = ["grp"]
+    if kind == "distinct":
+        df = distinct_ledger.read_registers(spark, zone, g)
+    elif kind == "dq":
+        df = dq_ledger.read_dq_ledger(spark, zone, g)
+    elif kind == "release":
+        df = release_ledger.read_release_fold(spark, zone, g)
+    elif kind == "freq":
+        df = freq_ledger.read_cells(spark, zone, g)
+    elif kind == "quantile":
+        df = quantile_ledger.read_histogram(spark, zone, g)
+    elif kind == "bloom":
+        df = bloom_ledger.read_filter(spark, zone, g)
+    elif kind == "cdc":
+        df = cdc_zone.read_cdc_state(spark, zone, ["k"])
+    else:
+        df = rollup_zone.read_rollup(spark, zone, g, ["cents"])
+        return sorted(map(tuple, df.collect())), _read("cdc", spark, zone)
+    return sorted(map(tuple, df.collect()))
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize(
+    "kind",
+    ["distinct", "dq", "release", "freq", "quantile", "bloom", "cdc", "rollup"],
+)
+def test_crash_between_snapshot_and_prune_replays_exactly(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Crash every ledger after its snapshot is written and before
+    anything is deleted, then restart it from the same checkpoint.  The
+    read at the crash must skip the delta the snapshot covers, and the
+    replayed batch must land the uncrashed read and layout.  AQE is off
+    for the crashed run so the replayed compaction cannot lean on AQE
+    running the fold's shuffle before an overwrite deletes its input."""
+    landing = str(tmp_path / "landing")
+    schema = _land(spark, landing, n_files=2)
+
+    def stream():
+        return ingest.stream_landing_zone(
+            spark, landing, schema, max_files_per_trigger=1
+        )
+
+    _start(kind, stream(), str(tmp_path / "ref"), str(tmp_path / "ck_ref"))
+    want = _read(kind, spark, str(tmp_path / "ref"))
+
+    real_prune = ledger.prune
+    calls = []
+
+    def crash_once(*args):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("injected crash between snapshot and prune")
+        real_prune(*args)
+
+    monkeypatch.setattr(ledger, "prune", crash_once)
+    zone, ck = str(tmp_path / "zone"), str(tmp_path / "ck")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        q, subs = _query(kind, stream(), zone, ck)
+        with pytest.raises(Exception):
+            q.awaitTermination(120)
+        # batch 1 crashed in its compaction: snapshot upto=0 written,
+        # batch 0 (covered by it) and batch 1 still on disk
+        delta_dir, compact_dir = subs[0]
+        assert ledger.dir_ids(compact_dir, "upto") == [0]
+        assert ledger.dir_ids(delta_dir, "batch") == [0, 1]
+        assert _read(kind, spark, zone) == want
+
+        _start(kind, stream(), zone, ck)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert _read(kind, spark, zone) == want
+    for delta_dir, compact_dir in subs:
+        assert ledger.dir_ids(compact_dir, "upto") == [0]
+        assert ledger.dir_ids(delta_dir, "batch") == [1]

@@ -8,6 +8,7 @@ import os
 
 from peskas_mozambique_data_pipeline_spark.io import parquet_io
 from peskas_mozambique_data_pipeline_spark.streaming import ingest as si
+from peskas_mozambique_data_pipeline_spark.streaming import ledger
 from peskas_mozambique_data_pipeline_spark.streaming import release_ledger as rl
 import pytest
 
@@ -69,9 +70,9 @@ def test_compaction_preserves_fold_and_never_double_counts(spark, tmp_path):
     )
 
     compact_dir = os.path.join(zone, rl.FOLD_COMPACT_SUBDIR)
-    assert rl._dir_ids(compact_dir, "upto")  # a snapshot landed
-    live = rl._dir_ids(fold_dir, "batch")
-    assert all(b > max(rl._dir_ids(compact_dir, "upto")) for b in live)
+    assert ledger.dir_ids(compact_dir, "upto")  # a snapshot landed
+    live = ledger.dir_ids(fold_dir, "batch")
+    assert all(b > max(ledger.dir_ids(compact_dir, "upto")) for b in live)
     # SUM is not idempotent — the fold surviving compaction bit-exactly
     # is the proof the bookkeeping never double-counts
     got = {

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from peskas_mozambique_data_pipeline_spark.streaming import governance as gov
 from peskas_mozambique_data_pipeline_spark.streaming import ingest as si
+from peskas_mozambique_data_pipeline_spark.streaming import ledger
 import pytest
 
 
@@ -140,8 +141,8 @@ def test_stream_cap_counts_compaction_bounds_dirs(spark, tmp_path):
             # 4 batches, compact_every=2 → folds after batch 1 (upto=0)
             # and batch 3 (upto=2): one surviving snapshot, ≤ compact
             # window of delta dirs
-            n_deltas = len(gov._dir_ids(counts_dir, "batch"))
-            snaps = gov._dir_ids(
+            n_deltas = len(ledger.dir_ids(counts_dir, "batch"))
+            snaps = ledger.dir_ids(
                 os.path.join(zone, gov.COUNTS_COMPACT_SUBDIR), "upto"
             )
             assert snaps == [2]
