@@ -497,76 +497,86 @@ def connected_components(
     that turns near-dup PAIRS into actionable duplicate CLUSTERS (keep
     one representative per component, drop the rest).
 
-    Iterative min-label propagation: every node's label becomes the min
-    of its own and its neighbors' labels; the fixpoint assigns each
-    component its minimum node id — a UNIQUE fixpoint, so the result is
-    deterministic regardless of engine, ordering, or partitioning.
+    Closed-neighbourhood min-label propagation: every node's label
+    becomes the min label over its neighbours AND itself; the fixpoint
+    assigns each component its minimum node id — a UNIQUE fixpoint, so
+    the result is deterministic regardless of engine, ordering, or
+    partitioning.  A NULL id is a node of its own: it keeps the label
+    NULL and never passes a label on (an edge with one NULL end links
+    nothing).
 
-    Scale shape: per iteration one equi-join of the label table onto
-    the symmetrized edge list plus one groupBy-min — both shuffle on
-    node id (AQE splits hub-node skew).  Iterations = graph diameter;
-    near-dup clusters are shallow (single-digit).  Each iteration
-    ``localCheckpoint``s the label frame to cut the growing lineage and
-    runs one small ``count()`` action for the convergence test — the
-    GraphX/Pregel cost model.  Raises if ``max_iter`` is hit before the
+    Scale shape: the edge frame is read ONCE — one ``inline`` emits
+    both directions plus a self-loop per endpoint, ``distinct``, one
+    ``localCheckpoint`` — so an expensive upstream (a MinHash+verify or
+    cosine self-join pipeline) runs once, not once per union branch.
+    Round 1 is a join-free ``groupBy(a).min(b)`` (every node starts as
+    its own label); every later round is ONE join of the label table
+    onto the edge list plus ONE groupBy that yields the new label and,
+    from the self-loop row, the old one — so "changed" needs no second
+    join.  Rounds = graph diameter + 1; near-dup clusters are shallow
+    (single-digit).  Raises if ``max_iter`` rounds end before the
     fixpoint so an unconverged labeling can never masquerade as a
     result.
 
-    ``probe_every`` stretches the checkpoint + convergence-probe
-    cadence (the ``pagerank`` ``checkpoint_every`` knob): between
-    probes, iterations chain as lineage and execute inside one job.
-    Correctness is cadence-independent — labels only DECREASE toward a
-    UNIQUE fixpoint, so iterations past convergence are no-ops and a
-    probe delayed by ≤ probe_every−1 iterations detects the same
-    fixpoint (parity-pinned in pytest).  Trade-off measured at sf0.1
-    (NOTES r8 s3): the label frame is read TWICE per iteration (the
-    neighbor join and the merge join), so an unmaterialized iteration
-    recomputes its join+groupBy subtree — cadence 2 only pays when
-    iterations are cheap relative to job overhead.
+    ``probe_every`` sets the checkpoint + convergence-probe cadence
+    (the ``pagerank`` ``checkpoint_every`` knob): between probes,
+    rounds chain as lineage and execute inside one job.  Each round
+    reads the previous labels once, so that lineage is linear — a
+    longer cadence saves checkpoint and probe jobs without recomputing
+    any round.  Correctness is cadence-independent — labels only
+    DECREASE toward a UNIQUE fixpoint, so rounds past convergence are
+    no-ops and a probe delayed by ≤ probe_every−1 rounds detects the
+    same fixpoint (parity-pinned in pytest).
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        # pre-partition by the per-iteration join key BEFORE the
-        # checkpoint (r14, guide §2.4 "two operations keyed the same
-        # way share one exchange"): LogicalRDD preserves the physical
-        # partitioning, so every iteration's ``sym ⋈ labels ON b``
-        # re-exchanges only the |V|-row label table — the |E|-row edge
-        # list is shuffled ONCE here instead of once per iteration
-        # (measured at sf0.1 on the embedding near-dup graph, 6
-        # iterations: 4.85→2.48 s cold / 2.14→1.95 s warm, identical
-        # labels)
-        .repartition(F.col("b"))
-        # materialize ONCE: the edge list is re-read every iteration,
-        # and its upstream (e.g. a full MinHash+verify pipeline) must
-        # not re-execute per loop
-        .localCheckpoint()
-    )
     if probe_every < 1:
         raise ValueError("probe_every must be >= 1")
-    labels = sym.select(F.col("a").alias("n")).distinct().withColumn("comp", F.col("n"))
-    labels = labels.localCheckpoint()
-    for i in range(max_iter):
-        nbr_min = (
-            sym.join(
-                labels.select(F.col("n").alias("b"), F.col("comp").alias("nbr_comp")),
-                "b",
+    u, v = F.col(src), F.col(dst)
+    sym = (
+        edges.select(
+            F.inline(
+                F.array(
+                    F.struct(u.alias("a"), v.alias("b")),
+                    F.struct(v.alias("a"), u.alias("b")),
+                    F.struct(u.alias("a"), u.alias("b")),
+                    F.struct(v.alias("a"), v.alias("b")),
+                )
             )
-            .groupBy("a")
-            .agg(F.min("nbr_comp").alias("nbr_min"))
-            .select(F.col("a").alias("n"), "nbr_min")
         )
-        # labels only ever DECREASE, so "changed" falls out of the same
-        # row — no separate old-vs-new join per iteration
-        new_labels = labels.join(nbr_min, "n", "left").select(
-            "n",
-            F.least(
-                F.col("comp"), F.coalesce(F.col("nbr_min"), F.col("comp"))
-            ).alias("comp"),
-            (F.coalesce(F.col("nbr_min"), F.col("comp")) < F.col("comp")).alias(
-                "_changed"
-            ),
+        # both ends set (an edge or a node's self-loop) or both NULL
+        # (the NULL node's self-loop): a half-NULL edge links nothing
+        .filter(F.col("a").isNull() == F.col("b").isNull())
+        .distinct()
+        # materialize ONCE: every round re-reads the edge list, and its
+        # upstream must not re-execute per round.  No pre-partitioning:
+        # under AQE the checkpointed frame reports UnknownPartitioning
+        # (see ``session.partitioned_checkpoint``), so a repartition
+        # here would be one more shuffle that no round reuses.
+        .localCheckpoint()
+    )
+    labels = None
+    for i in range(max_iter):
+        if labels is None:
+            # round 1: every node starts as its own label — no join
+            rows = sym.withColumn("c", F.col("b"))
+        else:
+            rows = sym.join(
+                labels.select(F.col("n").alias("nb"), F.col("comp").alias("c")),
+                # null-safe, so the NULL node's self-loop keeps its row
+                F.col("b").eqNullSafe(F.col("nb")),
+            )
+        new_labels = (
+            rows.groupBy("a")
+            .agg(
+                F.min("c").alias("comp"),
+                # the self-loop row carries the node's old label; labels
+                # only DECREASE, so "changed" is comp < prev
+                F.min(F.when(F.col("a") == F.col("b"), F.col("c"))).alias("prev"),
+            )
+            .select(
+                F.col("a").alias("n"),
+                "comp",
+                (F.col("comp") < F.col("prev")).alias("_changed"),
+            )
         )
         if (i + 1) % probe_every == 0 or i == max_iter - 1:
             new_labels = new_labels.localCheckpoint()
@@ -591,12 +601,10 @@ def duplicate_clusters(
     through to :func:`connected_components` for deep chains.
 
     ``probe_every=2`` by default: near-dup cluster graphs are shallow
-    (few, cheap iterations), so halving the checkpoint/probe cadence
-    trades a bounded ≤2× recompute of one iteration's joins for half
-    the materializations — measured 7.34→5.66 s min on the sf0.1
-    registry row with identical output (NOTES r8 s3).  For DEEP or
-    very wide graphs prefer ``probe_every=1`` (the recompute factor
-    compounds per unmaterialized iteration)."""
+    (few, cheap rounds), so probing every second round halves the
+    checkpoint and probe jobs.  Each round reads the previous labels
+    once, so an unprobed round is computed once, inside the next
+    probe's job, and never recomputed."""
     comp = connected_components(
         edges, src, dst, max_iter=max_iter, probe_every=probe_every
     )

@@ -5,8 +5,9 @@ PageRank in engine-exact integer arithmetic.
 The Pregel shape on DataFrames: ranks and edges are plain frames; one
 iteration is a rank⋈edges join + a map-side-combinable SUM — the same
 join key both ways, so on a cluster the shuffle partitioning is reused
-across iterations.  Per-iteration ``localCheckpoint`` cuts the lineage
-exactly as ``connected_components`` does.
+across iterations.  A ``localCheckpoint`` every ``checkpoint_every``
+iterations cuts the lineage, as ``connected_components`` does at its
+``probe_every`` cadence.
 
 Engine-exactness: float PageRank sums are partition-order-dependent.
 Here ranks live in integer nano-units; each edge's contribution is

@@ -365,6 +365,29 @@ def test_connected_components_raises_without_convergence(spark):
         connected_components(edges, max_iter=1)
 
 
+@pytest.mark.parametrize("probe_every", [1, 2])
+def test_connected_components_null_ids_and_input_self_loops(spark, probe_every):
+    """A NULL id is a node of its own: it never takes a label and never
+    gives one (``(NULL, 3)`` must not pull NULL into 3's component).
+    Self-loops and repeated or reversed edges in the input are
+    harmless."""
+    from peskas_mozambique_data_pipeline_spark.operators.dedup import (
+        connected_components,
+    )
+
+    def cc(pairs):
+        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+        got = connected_components(edges, probe_every=probe_every).collect()
+        return sorted((tuple(r) for r in got), key=repr)
+
+    assert cc([(1, 2), (None, 3), (4, None), (5, 5)]) == sorted(
+        [(1, 1), (2, 1), (3, 3), (4, 4), (5, 5), (None, None)], key=repr
+    )
+    assert cc([(1, 2), (2, 1), (1, 2), (7, 7), (3, 3), (3, 4)]) == sorted(
+        [(1, 1), (2, 1), (3, 3), (4, 3), (7, 7)], key=repr
+    )
+
+
 def test_chunk_documents_boundaries(spark):
     from peskas_mozambique_data_pipeline_spark.operators.text import chunk_documents
 

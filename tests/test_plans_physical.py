@@ -607,3 +607,49 @@ def test_threshold_audit_window_after_score_groupby(spark):
     w = plan.index("Window")
     agg_positions = [i for i in range(len(plan)) if plan.startswith("HashAggregate", i)]
     assert any(i > w for i in agg_positions), "groupBy should sit below the window"
+
+
+def test_connected_components_reads_edges_once_and_one_join_per_round(
+    spark, tmp_path, monkeypatch
+):
+    """connected_components: the symmetrised edge list that every round
+    reads is materialized from ONE scan of the edge source (a second
+    scan re-runs the whole upstream pair generator), and each label
+    round after the first is one join plus one groupBy (the first round
+    needs no join: every node starts as its own label)."""
+    import re
+
+    from peskas_mozambique_data_pipeline_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edge_dir = str(tmp_path / "edges")
+    spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
+    ).write.parquet(edge_dir)
+    edges = spark.read.parquet(edge_dir)
+
+    checkpointed = []
+    frame_cls = type(edges)  # the concrete (classic) DataFrame class
+    real = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        extended = plan_of(self, "extended")
+        optimized = extended.split("== Optimized Logical Plan ==")[1]
+        checkpointed.append(
+            (plan_of(self, "simple"), optimized.split("== Physical Plan ==")[0])
+        )
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    got = sorted(tuple(r) for r in connected_components(edges).collect())
+    assert got == [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)]
+
+    sym_physical, _ = checkpointed[0]
+    assert sym_physical.count("FileScan parquet") == 1
+    rounds = [opt for _, opt in checkpointed[1:]]
+    assert len(rounds) == 4  # chain diameter 3, plus the round that changes nothing
+    for i, opt in enumerate(rounds):
+        joins = len(re.findall(r"\bJoin \w+", opt))
+        aggregates = len(re.findall(r"\bAggregate \[", opt))
+        assert (joins, aggregates) == ((0, 1) if i == 0 else (1, 1)), (i, opt)

@@ -2,6 +2,7 @@
 which includes eager localCheckpoint jobs + plan construction) and EXEC
 (noop-sink write of the returned frame).  The split tells you whether a
 slow query pays in eager materialization / planning or in the final plan.
+``build_jobs`` counts the Spark jobs the build ran (its job group).
 
 Usage: python tools/profile_queries.py [query ...]   (default: all)
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
@@ -27,7 +28,8 @@ def main() -> None:
     runs = max(1, int(os.environ.get("SPARK_GRAFT_PROFILE_RUNS", "2")))
 
     spark = get_spark(app_name="profile")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     for t in ("region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"):
         try:
@@ -38,13 +40,15 @@ def main() -> None:
     out = {}
     for name in names:
         fn = registry.SPARK_QUERIES[name]
-        rec = {"build": [], "exec": []}
-        for _ in range(runs):
-            spark.sparkContext.setJobDescription(f"profile:{name}:build")
+        rec = {"build": [], "exec": [], "build_jobs": []}
+        for run in range(runs):
+            group = f"profile:{name}:build:{run}"
+            sc.setJobGroup(group, f"profile:{name}:build")
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()
-            spark.sparkContext.setJobDescription(f"profile:{name}:exec")
+            rec["build_jobs"].append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            sc.setJobGroup(f"profile:{name}:exec:{run}", f"profile:{name}:exec")
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             rec["build"].append(round(t1 - t0, 3))
@@ -58,10 +62,12 @@ def main() -> None:
             "total_min": round(min(rec["build"]) + min(rec["exec"]), 3),
             "build": rec["build"],
             "exec": rec["exec"],
+            "build_jobs": rec["build_jobs"],
         }
         print(
             f"{name:24s} build {out[name]['build_min']:7.3f}  "
-            f"exec {out[name]['exec_min']:7.3f}",
+            f"exec {out[name]['exec_min']:7.3f}  "
+            f"build_jobs {min(rec['build_jobs'])}",
             flush=True,
         )
     print(json.dumps(out))
