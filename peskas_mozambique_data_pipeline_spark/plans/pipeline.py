@@ -28,7 +28,7 @@ from ..io import parquet_io
 from . import export as export_plan
 from . import merge_trips as mt
 from .preprocess import preprocess_landings
-from .validate import validate_surveys, validated_from_flags
+from .validate import validate_surveys
 
 
 @dataclass
@@ -160,20 +160,14 @@ def stage_validate(
     spark: SparkSession, zones: PipelineZones, taxa_bounds: DataFrame | None = None
 ) -> tuple[str, str]:
     """Validation job (workflow: validate_surveys_lurio): reads the
-    newest preprocessed snapshot, writes validated + flags zones.
-
-    Flags land first; ``validated`` is then rebuilt from the indicator
-    aggregate anti-joined against the flags snapshot just written, so
-    the flag battery runs once per stage instead of once per output.
-    This is exact: a submission is validated iff its written flag is
-    NULL, and the NULL-id group, never matched by an anti join, stays
-    in ``validated`` as it does in ``validate_surveys``."""
-    preprocessed = zones.read(spark, "preprocessed")
-    _, flags = validate_surveys(preprocessed, taxa_bounds=taxa_bounds)
+    newest preprocessed snapshot, writes the flags and validated zones.
+    Both are projections of ``validate_surveys``' one per-submission
+    aggregate, so each write is one scan of the snapshot and one
+    shuffle."""
+    validated, flags = validate_surveys(
+        zones.read(spark, "preprocessed"), taxa_bounds=taxa_bounds
+    )
     flags_path = zones.write(flags, "flags")
-    # the schema just written: the read-back infers nothing
-    written = spark.read.schema(flags.schema).parquet(flags_path)
-    validated = validated_from_flags(preprocessed, written)
     return zones.write(validated, "validated", range_by=["landing_date"]), flags_path
 
 

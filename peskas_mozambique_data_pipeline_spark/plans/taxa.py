@@ -102,7 +102,7 @@ def taxa_bounds(morphology: DataFrame) -> DataFrame:
 
 def as_model_coeffs(coeffs: DataFrame) -> DataFrame:
     """Adapter: ``catch_taxon, a_6, b_6`` → the ``catch_taxon, a, b``
-    shape ``preprocess.catch_info`` consumes (the reference passes
+    shape ``preprocess.preprocess_landings`` consumes (the reference passes
     ``lwcoeffs$lw`` straight into ``calculate_catch_lurio``,
     R/preprocessing-surveys.R:264-266)."""
     return coeffs.select(

@@ -23,10 +23,10 @@ Stage 2 — composite indicator flags on the NO-flag subset only
   11 zero fishers with catch_outcome "1"
 
 Both stages and the exclusion are projections of ONE per-submission
-frame: the stage-1 rollup (``consolidate_flags`` over the rule-annotated
-rows) joined 1:1, null-safe on ``submission_id``, to ``trip_indicators``
-over the catch-zeroed rows.  The composite flag is evaluated only where
-the stage-1 flag is NULL and the id is non-NULL, ``alert_flag`` is
+aggregate over the rule-annotated rows: the stage-1 flag rollup and the
+``trip_indicators`` expressions over the catch-zeroed columns share one
+``groupBy("submission_id")``.  The composite flag is evaluated only
+where the stage-1 flag is NULL and the id is non-NULL, ``alert_flag`` is
 ``coalesce(stage1, composite)``, and ``validated`` keeps the rows whose
 ``alert_flag`` is NULL or whose id is NULL.  This equals the reference's
 anti-join → stage 2 → full-join merge → anti-join formulation exactly:
@@ -39,9 +39,9 @@ anti-join → stage 2 → full-join merge → anti-join formulation exactly:
   ``validated``, because an anti join never matches a NULL key.
 
 The flag battery is data — (flag_id, predicate) pairs evaluated as one
-projection — and the taxa-bounds join broadcasts, so the DAG is one
-scan per aggregate and one join, with no full outer merge and no
-anti-join pass.
+projection — and the taxa bounds broadcast one row per taxon, so each
+output is one scan of ``preprocessed`` and one shuffle, with no join on
+the submission id.
 """
 
 from __future__ import annotations
@@ -98,14 +98,22 @@ def reference_rule_flags(
 
 def attach_taxa_bounds(df: DataFrame, taxa_bounds: DataFrame | None) -> DataFrame:
     """Broadcast-join per-taxon length bounds for flags 3/4 (J10); with
-    no bounds table the columns are NULL and the flags never fire."""
+    no bounds table the columns are NULL and the flags never fire.
+
+    Duplicate taxa collapse to one row, the strictest bounds
+    (``max(min_length)``, ``min(max_length_75)``): flags 3/4 then fire
+    exactly when any duplicate bound would fire them, and the rows stay
+    1:1 with ``df`` so per-submission sums are not multiplied."""
     if taxa_bounds is None:
         if "min_length" in df.columns:
             return df
         return df.withColumn("min_length", F.lit(None).cast("double")).withColumn(
             "max_length_75", F.lit(None).cast("double")
         )
-    b = taxa_bounds.select("catch_taxon", "min_length", "max_length_75")
+    b = taxa_bounds.groupBy("catch_taxon").agg(
+        F.max("min_length").alias("min_length"),
+        F.min("max_length_75").alias("max_length_75"),
+    )
     return df.join(F.broadcast(b), "catch_taxon", "left")
 
 
@@ -188,26 +196,52 @@ def statistical_flags(
     ).drop("lower_bound", "upper_bound")
 
 
-def consolidate_flags(df: DataFrame, extra_flag_cols: Sequence[str] = ()) -> DataFrame:
-    """Per-submission flag rollup: distinct sorted flags joined ','
-    (R/validation.R:241-256 paste-collapse — dplyr inherits input order,
-    a distributed engine imposes a deterministic sort instead)."""
-    parts = [F.col("alert_flag"), *[F.col(c) for c in extra_flag_cols]]
+def flag_rollup(*flag_cols: str) -> Column:
+    """Aggregate: a group's distinct sorted flags joined ',', NULL when
+    none fired (R/validation.R:241-256 paste-collapse — dplyr inherits
+    input order, a distributed engine imposes a deterministic sort
+    instead)."""
     split_flags = F.flatten(
-        F.collect_list(F.split(flag_concat(*parts, sep=","), ","))
+        F.collect_list(F.split(flag_concat(*flag_cols, sep=","), ","))
     )
-    return (
-        df.groupBy("submission_id")
-        .agg(
-            F.first("submission_date").alias("submission_date"),
-            F.array_join(F.array_sort(F.array_distinct(split_flags)), ",").alias("alert_flag"),
-        )
-        .withColumn(
-            "alert_flag",
-            F.when(F.col("alert_flag") == "", F.lit(None)).otherwise(F.col("alert_flag")),
-        )
-        .select("submission_id", "submission_date", "alert_flag")
+    rolled = F.array_join(F.array_sort(F.array_distinct(split_flags)), ",")
+    return F.when(rolled != "", rolled)
+
+
+def consolidate_flags(df: DataFrame, extra_flag_cols: Sequence[str] = ()) -> DataFrame:
+    """Per-submission flag rollup (:func:`flag_rollup`)."""
+    return df.groupBy("submission_id").agg(
+        F.first("submission_date").alias("submission_date"),
+        flag_rollup("alert_flag", *extra_flag_cols).alias("alert_flag"),
     )
+
+
+# trip-level columns every catch row of a submission repeats
+_TRIP_FIRSTS = (
+    "catch_outcome", "n_fishers", "trip_duration", "gear_type", "habitat",
+    "district", "landing_date",
+)
+_INDICATOR_COLUMNS = (
+    "submission_id", "catch_kg", "catch_price", *_TRIP_FIRSTS,
+    "cpue", "rpue", "price_per_kg",
+)
+
+
+def _trip_totals(catch_kg: Column, catch_price: Column) -> list[Column]:
+    return [
+        sum_not_null(catch_kg).alias("catch_kg"),
+        F.first(catch_price, ignorenulls=True).alias("catch_price"),
+        *[F.first(c, ignorenulls=True).alias(c) for c in _TRIP_FIRSTS],
+    ]
+
+
+def _ratios() -> list[Column]:
+    effort = F.col("n_fishers") * F.col("trip_duration")
+    return [
+        safe_div(F.col("catch_kg"), effort).alias("cpue"),
+        safe_div(F.col("catch_price"), effort).alias("rpue"),
+        safe_div(F.col("catch_price"), F.col("catch_kg")).alias("price_per_kg"),
+    ]
 
 
 def trip_indicators(validated: DataFrame) -> DataFrame:
@@ -216,23 +250,9 @@ def trip_indicators(validated: DataFrame) -> DataFrame:
     Inf-on-divide-by-zero is normalized to NULL at the source
     (R/validation.R:316-359)."""
     per_trip = validated.groupBy("submission_id").agg(
-        sum_not_null("catch_kg").alias("catch_kg"),
-        F.first("catch_price", ignorenulls=True).alias("catch_price"),
-        F.first("catch_outcome", ignorenulls=True).alias("catch_outcome"),
-        F.first("n_fishers", ignorenulls=True).alias("n_fishers"),
-        F.first("trip_duration", ignorenulls=True).alias("trip_duration"),
-        F.first("gear_type", ignorenulls=True).alias("gear_type"),
-        F.first("habitat", ignorenulls=True).alias("habitat"),
-        F.first("district", ignorenulls=True).alias("district"),
-        F.first("landing_date", ignorenulls=True).alias("landing_date"),
+        *_trip_totals(F.col("catch_kg"), F.col("catch_price"))
     )
-    effort = F.col("n_fishers") * F.col("trip_duration")
-    return per_trip.select(
-        "*",
-        safe_div(F.col("catch_kg"), effort).alias("cpue"),
-        safe_div(F.col("catch_price"), effort).alias("rpue"),
-        safe_div(F.col("catch_price"), F.col("catch_kg")).alias("price_per_kg"),
-    )
+    return per_trip.select("*", *_ratios())
 
 
 def composite_flag(thresholds: Mapping[str, float] | None = None) -> Column:
@@ -254,22 +274,6 @@ def composite_flag(thresholds: Mapping[str, float] | None = None) -> Column:
     )
 
 
-def survey_indicators(preprocessed: DataFrame) -> DataFrame:
-    """Per-trip indicators over every row of every submission.
-
-    Catch outcome "0" zeroes catch AND price only on the indicator path
-    (R/validation.R:291-302, post-flagging) — otherwise a zero-catch
-    trip with a recorded price fires flag 8 via Inf."""
-    zero = F.col("catch_outcome") == "0"
-    return trip_indicators(
-        preprocessed.withColumn(
-            "catch_kg", F.when(zero, F.lit(0.0)).otherwise(F.col("catch_kg"))
-        ).withColumn(
-            "catch_price", F.when(zero, F.lit(0.0)).otherwise(F.col("catch_price"))
-        )
-    )
-
-
 def validate_surveys(
     preprocessed: DataFrame,
     taxa_bounds: DataFrame | None = None,
@@ -282,50 +286,37 @@ def validate_surveys(
     with its consolidated alert string across both stages; ``validated``
     excludes every flagged submission and carries the per-trip
     composite indicators.  Both are projections of ONE per-submission
-    frame (module docstring): the stage-1 rollup joined 1:1 on the id
-    to the indicators of all rows.
+    aggregate (module docstring).
     """
     # stage-1 flags run on the ORIGINAL columns: the reference computes
     # the rule battery before any normalization, so an outcome-0 row
     # with a recorded taxon and positive catch_kg does NOT fire flag 2
     # (zeroing catch first would fabricate the kg<=0 condition)
-    with_bounds = attach_taxa_bounds(preprocessed, taxa_bounds)
-    stage1 = consolidate_flags(
-        apply_rule_flags(with_bounds, rules or reference_rule_flags(thresholds))
+    annotated = apply_rule_flags(
+        attach_taxa_bounds(preprocessed, taxa_bounds),
+        rules or reference_rule_flags(thresholds),
     )
-    indicators = survey_indicators(preprocessed)
-    s, i = stage1.alias("s"), indicators.alias("i")
-    # both sides are grouped by submission_id, so the join is 1:1; the
-    # null-safe key pairs the NULL-id groups too
-    per_sub = s.join(
-        i, F.col("s.submission_id").eqNullSafe(F.col("i.submission_id"))
-    )
-    sid = F.col("s.submission_id")
-    alert = F.coalesce(
-        F.col("s.alert_flag"),
-        F.when(sid.isNotNull(), composite_flag(thresholds)),
-    )
-    frame = per_sub.select(
-        sid.alias("submission_id"),
-        F.col("s.submission_date").alias("submission_date"),
-        alert.alias("alert_flag"),
-        *[F.col(f"i.{c}").alias(c) for c in indicators.columns[1:]],
-    )
+    # catch outcome "0" zeroes catch AND price only on the indicator
+    # path (R/validation.R:291-302, post-flagging) — otherwise a
+    # zero-catch trip with a recorded price fires flag 8 via Inf
+    zero = F.col("catch_outcome") == "0"
+    per_sub = annotated.groupBy("submission_id").agg(
+        F.first("submission_date").alias("submission_date"),
+        flag_rollup("alert_flag").alias("_stage1"),
+        *_trip_totals(
+            F.when(zero, F.lit(0.0)).otherwise(F.col("catch_kg")),
+            F.when(zero, F.lit(0.0)).otherwise(F.col("catch_price")),
+        ),
+    ).select("*", *_ratios())
+    sid = F.col("submission_id")
+    frame = per_sub.withColumn("alert_flag", F.coalesce(
+        F.col("_stage1"), F.when(sid.isNotNull(), composite_flag(thresholds))
+    ))
     flags = frame.select("submission_id", "submission_date", "alert_flag")
     validated = frame.filter(
-        F.col("alert_flag").isNull() | F.col("submission_id").isNull()
-    ).select(*indicators.columns)
+        F.col("alert_flag").isNull() | sid.isNull()
+    ).select(*_INDICATOR_COLUMNS)
     return validated, flags
-
-
-def validated_from_flags(preprocessed: DataFrame, flags: DataFrame) -> DataFrame:
-    """``validated`` rebuilt against an already-written flags table:
-    the indicators of every submission minus the flagged ids.  Exact
-    for the ``flags`` output of :func:`validate_surveys` over the same
-    ``preprocessed``: flagged ids are non-NULL or never match, and the
-    flags table holds one row per id, so no ``distinct`` is needed."""
-    bad = flags.filter(F.col("alert_flag").isNotNull()).select("submission_id")
-    return survey_indicators(preprocessed).join(bad, "submission_id", "left_anti")
 
 
 def explode_flags(flags: DataFrame) -> DataFrame:

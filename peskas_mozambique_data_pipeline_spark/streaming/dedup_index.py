@@ -41,11 +41,12 @@ Index layout (what actually bounds the per-batch read):
   ``operators/merge.py``.
 
 Compaction is crash-safe by the shared ledger algebra
-(``streaming/ledger.py``): the snapshot is keyed ``upto=<batch_id>``
-and written before any deletion; a replayed batch finds its own
-snapshot already in place, reads it (its own rows join-filter out via
-``id_n != id_x`` and the pair dedup), rewrites byte-identical outputs
-and only prunes.
+(``streaming/ledger.py``): the snapshot is keyed ``upto=<batch_id>``,
+written to ``upto=<batch_id>.tmp`` and renamed into place before any
+deletion, and catalogued only after the rename; a replayed batch finds
+its own snapshot already in place, reads it (its own rows join-filter
+out via ``id_n != id_x`` and the pair dedup), rewrites byte-identical
+outputs and only prunes.
 
 State lives in the zone, not the state store — the streaming query
 itself is stateless, so there is no watermark bound on how far back a
@@ -56,6 +57,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -219,15 +221,30 @@ def compact_index_zone(
     prefix is legacy-shared; uniqueness comes from the zone-path md5).
     """
     path = os.path.join(compact_dir, f"upto={batch_id}")
+    table = _snapshot_table(compact_dir, batch_id)
     if not os.path.isdir(path):  # a replay finds it written: only prune
+        # written to ``.tmp`` and renamed into place (``ledger.compact``'s
+        # rule), and only then catalogued: a crash mid-write leaves a
+        # directory no reader counts, and the table never names it
+        tmp = path + ".tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
         full = read_index(spark, index_dir, compact_dir)
         (
             full.write.mode("overwrite")
             .bucketBy(snapshot_buckets, "band", "bucket")
             .sortBy("band", "bucket")
             .format("parquet")
-            .option("path", path)
-            .saveAsTable(_snapshot_table(compact_dir, batch_id))
+            .option("path", tmp)
+            .saveAsTable(table)
+        )
+        spark.sql(f"DROP TABLE {table}")  # external: the files stay
+        os.rename(tmp, path)
+        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in full.schema)
+        spark.sql(
+            f"CREATE TABLE {table} ({cols}) USING parquet"
+            " CLUSTERED BY (band, bucket) SORTED BY (band, bucket)"
+            f" INTO {snapshot_buckets} BUCKETS LOCATION '{path}'"
         )
     for u in dir_ids(compact_dir, "upto"):
         if u < batch_id:

@@ -32,10 +32,11 @@ contribution exactly once.  A crash between the snapshot write and the
 delete leaves covered deltas behind; reads skip them, and the replayed
 compaction finds its snapshot already written.  It does not rewrite the
 snapshot, because that would overwrite the directory it reads from.
-It only prunes.  ``tests/test_ledger_parts.py`` injects exactly that
-crash into every ledger kind.  The one interleaving not covered is a
-crash DURING the snapshot write: the torn ``upto=`` directory then
-counts as written.
+It only prunes.  A snapshot is written to ``upto=<id>.tmp`` and renamed
+into place, so a crash DURING the write leaves a directory whose id
+does not parse: every reader skips it, and the replay rewrites it.
+``tests/test_ledger_parts.py`` injects both crashes into every ledger
+kind.
 
 Snapshot and deltas share one schema (a fold keeps its delta's columns
 and types), so a read is ONE multi-path parquet scan however many parts
@@ -118,14 +119,17 @@ def compact(
 ) -> None:
     """Fold the parts ≤ ``upto`` into snapshot ``upto=<upto>``, then
     prune.  ``write_snapshot(parts, path)`` writes the snapshot from
-    the unfolded parts.  A replay that finds the snapshot already
-    written goes straight to the prune (module docstring)."""
+    the unfolded parts, to a ``.tmp`` path that is then renamed into
+    place.  A replay that finds the snapshot already written goes
+    straight to the prune (module docstring)."""
     snap = os.path.join(compact_dir, f"upto={upto}")
     if not os.path.isdir(snap):
         parts = read_parts(spark, part_dir, compact_dir, upto, schema)
         if parts is None:
             return
-        write_snapshot(parts, snap)
+        shutil.rmtree(snap + ".tmp", ignore_errors=True)
+        write_snapshot(parts, snap + ".tmp")
+        os.rename(snap + ".tmp", snap)
     prune(part_dir, compact_dir, upto)
 
 

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from peskas_mozambique_data_pipeline_spark.streaming import dedup_index as di
@@ -115,15 +117,10 @@ def test_compaction_bounds_the_index(spark, tmp_path):
     assert (1, 3) in got and got.get((4, 5)) == 1.0
 
 
-@pytest.mark.slow
-def test_crash_between_snapshot_and_prune_replays_exactly(
-    spark, tmp_path, monkeypatch
-):
-    """Crash the compaction after the bucketed snapshot is written and
-    before anything is deleted, then restart from the same checkpoint:
-    the replayed batch keeps the snapshot it finds (rewriting it would
-    overwrite the table it reads) and lands the uncrashed pairs and
-    layout."""
+def _crash_and_replay(spark, tmp_path, inject, upto_at_crash):
+    """Run the index into the crash ``inject()`` installs (first call
+    only) after an uncrashed reference run, then restart from the same checkpoint: the replay lands the
+    uncrashed pairs and layout, and catalogues the snapshot."""
     landing = str(tmp_path / "landing")
     schema = _write(spark, landing, [(1, DOC), (2, OTHER)])
     _write(spark, landing, [(3, DOC_NEAR), (4, THIRD), (5, THIRD)])
@@ -142,6 +139,30 @@ def test_crash_between_snapshot_and_prune_replays_exactly(
     _, ref_pairs = run("ref")
     want = sorted(map(tuple, di.read_pairs(spark, ref_pairs).collect()))
 
+    inject()
+    with pytest.raises(Exception):
+        run("zone")
+    index_dir = str(tmp_path / "zone" / di.INDEX_SUBDIR)
+    compact_dir = str(tmp_path / "zone" / di.COMPACT_SUBDIR)
+    assert ledger.dir_ids(compact_dir, "upto") == upto_at_crash
+    assert ledger.dir_ids(index_dir, "batch") == [0, 1]
+
+    _, pairs_dir = run("zone")
+    assert sorted(map(tuple, di.read_pairs(spark, pairs_dir).collect())) == want
+    assert sorted(os.listdir(compact_dir)) == ["upto=1"]
+    assert ledger.dir_ids(index_dir, "batch") == []
+    assert spark.catalog.tableExists(di._snapshot_table(compact_dir, 1))
+
+
+@pytest.mark.slow
+def test_crash_between_snapshot_and_prune_replays_exactly(
+    spark, tmp_path, monkeypatch
+):
+    """Crash the compaction after the bucketed snapshot is written and
+    before anything is deleted, then restart from the same checkpoint:
+    the replayed batch keeps the snapshot it finds (rewriting it would
+    overwrite the table it reads) and lands the uncrashed pairs and
+    layout."""
     real_prune = di.prune
     calls = []
 
@@ -151,19 +172,37 @@ def test_crash_between_snapshot_and_prune_replays_exactly(
             raise RuntimeError("injected crash between snapshot and prune")
         real_prune(*args)
 
-    monkeypatch.setattr(di, "prune", crash_once)
-    with pytest.raises(Exception):
-        run("zone")
-    index_dir = str(tmp_path / "zone" / di.INDEX_SUBDIR)
-    compact_dir = str(tmp_path / "zone" / di.COMPACT_SUBDIR)
-    assert ledger.dir_ids(compact_dir, "upto") == [1]
-    assert ledger.dir_ids(index_dir, "batch") == [0, 1]
+    _crash_and_replay(
+        spark, tmp_path, lambda: monkeypatch.setattr(di, "prune", crash_once), [1]
+    )
 
-    _, pairs_dir = run("zone")
-    assert sorted(map(tuple, di.read_pairs(spark, pairs_dir).collect())) == want
-    assert ledger.dir_ids(compact_dir, "upto") == [1]
-    assert ledger.dir_ids(index_dir, "batch") == []
-    assert spark.catalog.tableExists(di._snapshot_table(compact_dir, 1))
+
+@pytest.mark.slow
+def test_crash_inside_snapshot_write_replays_exactly(spark, tmp_path, monkeypatch):
+    """Crash the compaction part-way through the bucketed snapshot
+    write: its files land under ``upto=1.tmp``, then its data files
+    vanish before the crash.  No reader counts that directory, the
+    catalog never names it, and the replay rewrites the snapshot."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.saveAsTable
+    torn = []
+
+    def save_as_table(self, name, *args, **kw):
+        real(self, name, *args, **kw)
+        if not torn:
+            tmp = str(tmp_path / "zone" / di.COMPACT_SUBDIR / "upto=1.tmp")
+            torn.append(tmp)
+            for f in os.listdir(tmp):
+                if f.startswith("part-"):
+                    os.remove(os.path.join(tmp, f))
+            raise RuntimeError("injected crash inside the snapshot write")
+
+    _crash_and_replay(
+        spark, tmp_path,
+        lambda: monkeypatch.setattr(DataFrameWriter, "saveAsTable", save_as_table), [],
+    )
+    assert len(torn) == 1
 
 
 def test_streaming_pairs_match_batch_pipeline(spark, tmp_path):

@@ -2,7 +2,8 @@
 newest snapshot and the deltas after it are read as ONE multi-path
 parquet scan, which is exact only if every ledger's snapshot keeps its
 delta's schema and deltas the snapshot covers are never read again; and
-a crash between the snapshot write and the delete replays exactly."""
+a crash between the snapshot write and the delete, or during the
+snapshot write, replays exactly."""
 
 from __future__ import annotations
 
@@ -205,18 +206,10 @@ def _read(kind, spark, zone):
     return sorted(map(tuple, df.collect()))
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize(
-    "kind",
-    ["distinct", "dq", "release", "freq", "quantile", "bloom", "cdc", "rollup"],
-)
-def test_crash_between_snapshot_and_prune_replays_exactly(
-    spark, tmp_path, monkeypatch, kind
-):
-    """Crash every ledger after its snapshot is written and before
-    anything is deleted, then restart it from the same checkpoint.  The
-    read at the crash must skip the delta the snapshot covers, and the
-    replayed batch must land the uncrashed read and layout.  AQE is off
+def _crash_and_replay(spark, tmp_path, kind, inject, upto_at_crash):
+    """Run ``kind`` into the crash ``inject()`` installs (first call
+    only) after an uncrashed reference run, check the read at the crash, restart from the same checkpoint and
+    check the replay lands the uncrashed read and layout.  AQE is off
     for the crashed run so the replayed compaction cannot lean on AQE
     running the fold's shuffle before an overwrite deletes its input."""
     landing = str(tmp_path / "landing")
@@ -230,6 +223,41 @@ def test_crash_between_snapshot_and_prune_replays_exactly(
     _start(kind, stream(), str(tmp_path / "ref"), str(tmp_path / "ck_ref"))
     want = _read(kind, spark, str(tmp_path / "ref"))
 
+    inject()
+    zone, ck = str(tmp_path / "zone"), str(tmp_path / "ck")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        q, subs = _query(kind, stream(), zone, ck)
+        with pytest.raises(Exception):
+            q.awaitTermination(120)
+        # batch 1 crashed in its compaction: batch 0 (folded into
+        # snapshot upto=0 when it was written) and batch 1 on disk
+        delta_dir, compact_dir = subs[0]
+        assert ledger.dir_ids(compact_dir, "upto") == upto_at_crash
+        assert ledger.dir_ids(delta_dir, "batch") == [0, 1]
+        assert _read(kind, spark, zone) == want
+
+        _start(kind, stream(), zone, ck)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert _read(kind, spark, zone) == want
+    for delta_dir, compact_dir in subs:
+        assert sorted(os.listdir(compact_dir)) == ["upto=0"]
+        assert ledger.dir_ids(delta_dir, "batch") == [1]
+
+
+LEDGER_KINDS = ["distinct", "dq", "release", "freq", "quantile", "bloom", "cdc", "rollup"]
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("kind", LEDGER_KINDS)
+def test_crash_between_snapshot_and_prune_replays_exactly(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Crash every ledger after its snapshot is written and before
+    anything is deleted.  The read at the crash must skip the delta the
+    snapshot covers."""
     real_prune = ledger.prune
     calls = []
 
@@ -239,25 +267,44 @@ def test_crash_between_snapshot_and_prune_replays_exactly(
             raise RuntimeError("injected crash between snapshot and prune")
         real_prune(*args)
 
-    monkeypatch.setattr(ledger, "prune", crash_once)
-    zone, ck = str(tmp_path / "zone"), str(tmp_path / "ck")
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        q, subs = _query(kind, stream(), zone, ck)
-        with pytest.raises(Exception):
-            q.awaitTermination(120)
-        # batch 1 crashed in its compaction: snapshot upto=0 written,
-        # batch 0 (covered by it) and batch 1 still on disk
-        delta_dir, compact_dir = subs[0]
-        assert ledger.dir_ids(compact_dir, "upto") == [0]
-        assert ledger.dir_ids(delta_dir, "batch") == [0, 1]
-        assert _read(kind, spark, zone) == want
+    _crash_and_replay(
+        spark, tmp_path, kind,
+        lambda: monkeypatch.setattr(ledger, "prune", crash_once), upto_at_crash=[0],
+    )
 
-        _start(kind, stream(), zone, ck)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert _read(kind, spark, zone) == want
-    for delta_dir, compact_dir in subs:
-        assert ledger.dir_ids(compact_dir, "upto") == [0]
-        assert ledger.dir_ids(delta_dir, "batch") == [1]
+
+def _tear_first_snapshot_write(monkeypatch, torn: list) -> None:
+    """Make the first snapshot write (a path holding ``upto=``) crash
+    part-way: its files land, then its data files vanish before the
+    crash, as when a process dies mid-write.  Records the torn path."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kw):
+        real(self, path, *args, **kw)
+        if "upto=" in path and not torn:
+            torn.append(path)
+            for name in os.listdir(path):
+                if name.startswith("part-"):
+                    os.remove(os.path.join(path, name))
+            raise RuntimeError("injected crash inside the snapshot write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("kind", LEDGER_KINDS)
+def test_crash_inside_snapshot_write_replays_exactly(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Crash every ledger part-way through its snapshot write.  The torn
+    snapshot sits under ``upto=0.tmp``, whose id does not parse, so the
+    read at the crash still counts every delta, and the replay rewrites
+    the snapshot and renames it into place."""
+    torn = []
+    _crash_and_replay(
+        spark, tmp_path, kind,
+        lambda: _tear_first_snapshot_write(monkeypatch, torn), upto_at_crash=[],
+    )
+    assert len(torn) == 1 and torn[0].endswith("upto=0.tmp")

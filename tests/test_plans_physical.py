@@ -168,10 +168,11 @@ def test_validate_surveys_no_forced_broadcast_in_dag(spark):
 
 
 def test_validate_plan_one_frame_and_flags_zone(spark, tmp_path):
-    # both outputs are projections of ONE per-submission frame: the
-    # flags plan carries no full-outer merge of the flag stages and
-    # only the two per-submission aggregates' exchanges; validated,
-    # rebuilt against the written flags zone, scans preprocessed once
+    # both outputs are projections of ONE per-submission aggregate: the
+    # flags plan carries no full-outer merge of the flag stages, and
+    # each output scans preprocessed once, shuffles once and joins
+    # nothing; collect_list makes the aggregate an ObjectHashAggregate,
+    # so no SortAggregate (and no sort) either
     import datetime
 
     from peskas_mozambique_data_pipeline_spark.plans import validate as val
@@ -198,16 +199,33 @@ def test_validate_plan_one_frame_and_flags_zone(spark, tmp_path):
     assert "FullOuter" not in plan
     assert plan.count("Exchange hashpartitioning") <= 2
 
-    flags_dir = str(tmp_path / "flags")
-    flags.write.parquet(flags_dir)
-    validated = val.validated_from_flags(pre, spark.read.parquet(flags_dir))
-    scans = [
-        ln for ln in plan_of(validated, "simple").splitlines()
-        if "FileScan parquet" in ln
-    ]
-    # told apart by column (long locations are truncated in the plan)
-    assert sum("catch_outcome" in ln for ln in scans) == 1
-    assert sum("alert_flag" in ln for ln in scans) == 1
+    validated, _ = val.validate_surveys(pre)
+    for out in (validated, flags):
+        plan = plan_of(out, "simple")
+        assert plan.count("FileScan parquet") == 1
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert "Join" not in plan
+        assert "SortAggregate" not in plan and "ObjectHashAggregate" in plan
+
+
+def test_preprocess_is_one_projection_of_raw(spark, tmp_path):
+    # the trip-level columns and the exploded catch records come from
+    # one scan of raw: no full-join merge on the submission id, no
+    # shuffle, and no union/stack melt of the length bins; the LW
+    # coefficients broadcast
+    from peskas_mozambique_data_pipeline_spark.plans import preprocess as pre
+    from tests.test_pipeline import RAW_COLS, _row
+
+    raw_dir = str(tmp_path / "raw")
+    spark.createDataFrame(
+        [_row("s1"), _row("s2")], ", ".join(f"`{c}` string" for c in RAW_COLS)
+    ).write.parquet(raw_dir)
+    lw = spark.createDataFrame([("SNA", 0.02, 2.9)], "catch_taxon string, a double, b double")
+    plan = plan_of(pre.preprocess_landings(spark.read.parquet(raw_dir), lw), "simple")
+    assert plan.count("FileScan") == 1
+    assert "Exchange hashpartitioning" not in plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    assert "Union" not in plan and "Expand" not in plan
 
 
 def test_decontamination_broadcasts_benchmark_no_smj(spark):

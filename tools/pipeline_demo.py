@@ -4,6 +4,10 @@ lists) and time preprocess → validate → metrics → export end to end.
 
 Usage: python tools/pipeline_demo.py [n_submissions]   (default 100_000)
 
+Each stage runs under its own Spark job group, and the demo prints the
+stage's wall time next to the number of Spark jobs it ran, read from
+the status tracker.
+
 This exercises the plans/ modules at a volume the pytest fixtures
 don't, and proves the E1-E3 DAGs contain no driver-side bottlenecks:
 generation, reshape, validation and export all stay distributed.
@@ -97,6 +101,26 @@ def synth_raw(spark, n: int):
     )
 
 
+class StageClock:
+    """Wall time and Spark job count per stage: each stage runs under
+    its own job group, whose jobs the status tracker lists."""
+
+    def __init__(self, spark):
+        self.sc = spark.sparkContext
+        self.timings: dict[str, float] = {}
+        self.jobs: dict[str, int] = {}
+
+    def start(self, name: str) -> None:
+        self.name, self.t0 = name, time.perf_counter()
+        self.sc.setJobGroup(name, name)
+
+    def stop(self) -> None:
+        name = self.name
+        self.timings[name] = round(time.perf_counter() - self.t0, 2)
+        self.jobs[name] = len(self.sc.statusTracker().getJobIdsForGroup(name))
+        print(f"[stage ] {name}: {self.timings[name]} s, {self.jobs[name]} jobs")
+
+
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     spark = get_spark(app_name="pipeline-demo")
@@ -108,26 +132,26 @@ def main() -> None:
         "catch_taxon string, a double, b double",
     )
 
-    timings: dict[str, float] = {}
+    clock = StageClock(spark)
 
-    t0 = time.perf_counter()
+    clock.start("generate")
     raw = synth_raw(spark, n)
     raw.write.format("noop").mode("overwrite").save()
-    timings["generate"] = round(time.perf_counter() - t0, 2)
+    clock.stop()
 
-    t0 = time.perf_counter()
+    clock.start("preprocess")
     prep = pre.preprocess_landings(raw, lw)
     prep.write.format("noop").mode("overwrite").save()
-    timings["preprocess"] = round(time.perf_counter() - t0, 2)
+    clock.stop()
 
     prep = prep.cache()
     prep.count()
 
-    t0 = time.perf_counter()
+    clock.start("validate")
     validated, flags = val.validate_surveys(prep)
     validated.write.format("noop").mode("overwrite").save()
     flags.write.format("noop").mode("overwrite").save()
-    timings["validate"] = round(time.perf_counter() - t0, 2)
+    clock.stop()
 
     validated = validated.cache()
     n_valid = validated.count()
@@ -136,7 +160,7 @@ def main() -> None:
     # validation-flag battery generalized (operators/expectations.py):
     # every row-local rule folds into one scan; uniqueness and the
     # gear-dim referential check declare their own shuffle/anti-join
-    t0 = time.perf_counter()
+    clock.start("dq_report")
     from peskas_mozambique_data_pipeline_spark.operators import (
         expectations as dq,
     )
@@ -155,7 +179,7 @@ def main() -> None:
         unique_keys=[["submission_id", "catch_taxon", "length_range"]],
         dims=[("gear_type", gear_dim, "gear")],
     ).collect()
-    timings["dq_report"] = round(time.perf_counter() - t0, 2)
+    clock.stop()
     worst = max(report, key=lambda r: r.frac)
     print(f"[dq    ] {len(report)} checks; worst: {worst.rule} "
           f"{worst.n_violations}/{worst.n_rows} ({worst.frac})")
@@ -167,7 +191,7 @@ def main() -> None:
     # pruning CONTINUOUSLY MEASURED (the z-order discipline), and the
     # row-count assertion pins the bit-identical-to-plain-filter
     # contract on every demo run.
-    t0 = time.perf_counter()
+    clock.start("pruned_read")
     import shutil
     import tempfile
 
@@ -199,7 +223,7 @@ def main() -> None:
         ).count()
         assert n_pruned == n_full, (n_pruned, n_full)
         assert n_pruned_files < n_all_files, (n_pruned_files, n_all_files)
-        timings["pruned_read"] = round(time.perf_counter() - t0, 2)
+        clock.stop()
         print(
             f"[prune ] one-month window: {n_pruned_files}/{n_all_files} "
             f"files, {n_pruned} rows == plain filter"
@@ -211,7 +235,7 @@ def main() -> None:
     # k-anonymity over the columns an outsider can link (district ×
     # enumerator × landing month), then rare-class suppression — the
     # release loop operators/privacy.py packages (one shuffle each)
-    t0 = time.perf_counter()
+    clock.start("privacy_gate")
     from peskas_mozambique_data_pipeline_spark.operators import (
         privacy as pv,
     )
@@ -231,7 +255,7 @@ def main() -> None:
     n_kept = kept.count()
     assert n_kept == coarse.n_rows - coarse.n_risky_rows
     assert coarse.min_class_size >= fine.min_class_size
-    timings["privacy_gate"] = round(time.perf_counter() - t0, 2)
+    clock.stop()
     print(
         f"[privacy] day-grain QI: {fine.n_risky_rows}/{fine.n_rows} rows "
         f"risky over {fine.n_classes} classes; month-grain: "
@@ -239,14 +263,14 @@ def main() -> None:
         f"{coarse.n_rows - n_kept} suppressed"
     )
 
-    t0 = time.perf_counter()
+    clock.start("metrics")
     catch = prep.filter(F.col("catch_kg").isNotNull())
     metrics_plan.fishery_metrics(validated, catch).write.format("noop").mode(
         "overwrite"
     ).save()
-    timings["metrics"] = round(time.perf_counter() - t0, 2)
+    clock.stop()
 
-    t0 = time.perf_counter()
+    clock.start("export")
     export_plan.monthly_metrics(validated).write.format("noop").mode("overwrite").save()
     export_plan.sites_stats(validated).write.format("noop").mode("overwrite").save()
     export_plan.taxa_shares(catch).write.format("noop").mode("overwrite").save()
@@ -266,15 +290,16 @@ def main() -> None:
     export_plan.geo_region_indicators(geo, rollup).write.format("noop").mode(
         "overwrite"
     ).save()
-    timings["export"] = round(time.perf_counter() - t0, 2)
+    clock.stop()
 
     print(
         json.dumps(
             {
                 "n_submissions": n,
                 "n_validated_trips": n_valid,
-                "stages_sec": timings,
-                "total_sec": round(sum(timings.values()), 2),
+                "stages_sec": clock.timings,
+                "stage_jobs": clock.jobs,
+                "total_sec": round(sum(clock.timings.values()), 2),
             }
         )
     )
